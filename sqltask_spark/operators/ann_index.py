@@ -61,6 +61,8 @@ concurrent readers are always safe.
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -119,26 +121,7 @@ def _committed(
     return m
 
 
-def _pinned_read(
-    spark: SparkSession, m: dict, rel: str, *paths: str
-) -> DataFrame:
-    """Parquet read with the manifest-recorded schema for ``rel``
-    when present — planning then costs ZERO Spark jobs, where schema
-    inference over a multi-file relation runs a distributed
-    footer-read job per ``spark.read.parquet`` call (measured: one
-    job per unpinned read site; at 100 TB the footer sweep is real
-    work, repeated on every probe/mutation). Falls back to inference
-    for manifests committed before schemas were recorded — mutations
-    backfill the entry, so old indexes heal on their next write."""
-    import json as _json
-
-    from pyspark.sql.types import StructType
-
-    s = m.get("schemas", {}).get(rel)
-    reader = spark.read
-    if s:
-        reader = reader.schema(StructType.fromJson(_json.loads(s)))
-    return reader.parquet(*paths)
+_pinned_read = index_fs.pinned_read
 
 
 def _pinned_gen_read(
@@ -415,6 +398,180 @@ def build_ivf_index(
     return n_cells
 
 
+def _sweep(spark: SparkSession, path: str) -> list[str]:
+    """Sweep vector/quantizer/tombstone directories no manifest names
+    — the debris of a crashed writer. Committed = the UNION over all
+    manifests, not just the newest: older versions stay time-travel
+    readable until compaction or vacuum. Returns the swept names."""
+    live = index_fs.live_unions(
+        spark, path, ("generations", "quantizer", "tombstones")
+    )
+    return (
+        index_fs.sweep_orphans(
+            spark,
+            f"{path}/vectors",
+            {f"gen={g}" for g in live["generations"]},
+            "gen=",
+        )
+        + index_fs.sweep_orphans(
+            spark, f"{path}/quantizer", live["quantizer"], "g"
+        )
+        + index_fs.sweep_orphans(
+            spark, f"{path}/tombstones", live["tombstones"], "g"
+        )
+    )
+
+
+def _encode(spark: SparkSession, path: str, m_fest: dict, rows,
+            corpus_id: str, vec_col: str) -> DataFrame:
+    """``rows`` as stored vector rows (``neighbor_id, cv, cell, cn``
+    [+ ``codes``]) under the FROZEN quantizer of ``m_fest`` — new
+    vectors assign to the existing cells and, in PQ layout, encode
+    against the existing codebooks."""
+    cents = _read_centroids(spark, path, m_fest)
+    if m_fest["params"]["m"] is not None:
+        _, _, codebooks = _read_pq_codebooks(spark, path, m_fest)
+        encode = _pq_encode_udf(cents, codebooks)
+        base = rows.select(
+            F.col(corpus_id).alias("neighbor_id"),
+            F.col(vec_col).cast("array<float>").alias("cv"),
+            encode(F.col(vec_col)).alias("e"),
+        ).select(
+            "neighbor_id", "cv", F.col("e.codes").alias("codes"),
+            F.col("e.cell").alias("cell"),
+        )
+    else:
+        base = rows.select(
+            F.col(corpus_id).alias("neighbor_id"),
+            F.col(vec_col).cast("array<float>").alias("cv"),
+            _cell_assign_udf(cents, 1)(F.col(vec_col))[0].alias("cell"),
+        )
+    return base.withColumn("cn", l2_norm(as_double_array(F.col("cv"))))
+
+
+def _write_gen(df: DataFrame, path: str, gen: str) -> None:
+    (
+        df.repartition("cell")
+        .write.mode("overwrite")
+        .partitionBy("cell")
+        .parquet(f"{path}/vectors/gen={gen}")
+    )
+
+
+def apply_mutation(
+    spark: SparkSession,
+    path: str,
+    plan: index_fs.IndexMutation,
+    corpus_id: str,
+    vec_col: str = "embedding",
+    manifest: dict | None = None,
+) -> dict:
+    """Apply one driver-planned mutation (tombstone ``plan.gone``,
+    free ``plan.free``, append ``plan.rows`` — columns ``corpus_id``,
+    ``vec_col``) as ONE commit — the vector symmetry of
+    :func:`~sqltask_spark.operators.dedup_index.apply_mutation`, and
+    the core behind the small-batch arms of
+    :func:`append_to_ivf_index`, :func:`delete_from_ivf_index` and
+    :func:`unblock_ivf_ids` and behind the CDC index sync.
+
+    One orphan sweep, stats pruning, ONE generation-tagged membership
+    read (stored? in which generation? tombstoned?); then each
+    relation is written at most once — the generations holding freed
+    ids rewritten without them (same cell-partitioned layout, FROZEN
+    quantizer untouched), one tombstone set, one appended generation
+    — and ONE manifest commit carries it all, ``plan.synced``
+    included. Returns the counts delete, unblock and append would
+    return applied one after another."""
+    m = manifest if manifest is not None else _committed(spark, path)
+    _sweep(spark, path)
+    census = index_fs.take_census(
+        plan,
+        m,
+        lambda g: _pinned_gen_read(spark, path, m, [g]),
+        lambda t: _pinned_read(
+            spark, m, "tombstones", f"{path}/tombstones/{t}"
+        ),
+        "neighbor_id",
+    )
+    if census.changes_nothing() and not plan.synced:
+        return census.counts()
+    alloc = index_fs.name_allocator(
+        spark,
+        [f"{path}/vectors", f"{path}/quantizer", f"{path}/tombstones"],
+        m,
+    )
+    gens = list(m["generations"])
+    stats = dict(m.get("gen_stats", {}))
+    schemas = dict(m.get("schemas", {}))
+    removed = sorted(census.removed)
+    for g in census.affected:
+        st = stats.pop(g, None)
+        if census.fully_removed(g):
+            # every row goes: drop the generation instead of writing
+            # an unreadable empty directory
+            gens.remove(g)
+            continue
+        gnew = alloc()
+        _write_gen(
+            _pinned_gen_read(spark, path, m, [g]).drop("gen").filter(
+                index_fs.keep_ids_filter("neighbor_id", removed)
+            ),
+            path, gnew,
+        )
+        gens[gens.index(g)] = gnew
+        if st:
+            # a conservative superset range stays valid for pruning
+            stats[gnew] = st
+    tombs, tomb_schema = index_fs.write_tombstones(
+        spark, path, m, census, "neighbor_id", plan.id_type,
+        alloc,
+    )
+    if tomb_schema is not None:
+        schemas.setdefault("tombstones", tomb_schema.json())
+    if census.novel:
+        skip = sorted(census.stored & {t[0] for t in plan.row_ids})
+        novel = (
+            plan.rows.filter(index_fs.keep_ids_filter(corpus_id, skip))
+            if skip
+            else plan.rows
+        )
+        vec_df = _encode(spark, path, m, novel, corpus_id, vec_col)
+        gen = alloc()
+        _write_gen(vec_df, path, gen)
+        gens.append(gen)
+        st = index_fs.stats_from_id_rows(census.novel)
+        if st:
+            stats[gen] = st
+        # BACKFILL reader schemas for pre-schema manifests where
+        # derivable (the quantizer relations are not in hand here —
+        # they stay on inference until a rebuild records them)
+        schemas.setdefault("vectors", vec_df.schema.json())
+        schemas.setdefault(
+            "tombstones", vec_df.select("neighbor_id").schema.json()
+        )
+    if not gens:
+        raise ValueError(
+            f"mutation would leave {path} with zero generations"
+            " (every stored row is freed) — rebuild the index instead"
+        )
+    # the COMMIT: everything above was invisible until this line.
+    # Unknown manifest keys (sync markers, future metadata) carry
+    # forward verbatim
+    new_m = {
+        **{k: v for k, v in m.items() if k != "_seq"},
+        "generations": gens,
+        "tombstones": tombs,
+        "gen_stats": stats,
+        "schemas": schemas,
+        "batches": m.get("batches", [])
+        + ([plan.batch_id] if plan.batch_id else []),
+    }
+    if plan.synced:
+        new_m["synced"] = {**m.get("synced", {}), **plan.synced}
+    index_fs.commit_manifest(spark, path, new_m, m["_seq"])
+    return census.counts()
+
+
 def append_to_ivf_index(
     path: str,
     batch: DataFrame,
@@ -450,88 +607,29 @@ def append_to_ivf_index(
     the streaming sink's exactly-once fast path — instead of the
     anti-join recheck, which remains the correctness backstop for
     un-ledgered callers.
+
+    A batch under the collect cap is applied by
+    :func:`apply_mutation` (one bounded isin membership read instead
+    of the distinct + anti-join exchanges); larger batches keep the
+    join formulation below.
     """
     spark = batch.sparkSession
     m_fest = _committed(spark, path)
     if batch_id is not None and batch_id in m_fest.get("batches", []):
         return 0
-    # committed = the UNION over all manifests, not just the newest:
-    # older versions stay time-travel readable until compaction
-    live = index_fs.live_unions(
-        spark, path, ("generations", "quantizer", "tombstones")
-    )
-    index_fs.sweep_orphans(
-        spark,
-        f"{path}/vectors",
-        {f"gen={g}" for g in live["generations"]},
-        "gen=",
-    )
-    index_fs.sweep_orphans(
-        spark, f"{path}/quantizer", live["quantizer"], "g"
-    )
-    index_fs.sweep_orphans(
-        spark, f"{path}/tombstones", live["tombstones"], "g"
-    )
-    meta = m_fest["params"]
-    # SMALL-BATCH fast path (r12 session 3, the minhash-append
-    # mirror): a batch under the collect cap is pulled to the driver
-    # once (ids + filter-bit positions, one narrow job); generation
-    # pruning, the idempotency check (one bounded isin-pushdown
-    # membership scan instead of distinct + anti-join exchanges), the
-    # novel count and the manifest stats all derive driver-side.
-    # Results identical; larger batches keep the join formulation.
+    id_rows = index_fs.collect_id_rows(batch, corpus_id)
+    if id_rows is not None:
+        plan = index_fs.IndexMutation(
+            id_type=batch.schema[corpus_id].dataType,
+            rows=batch, row_ids=id_rows, batch_id=batch_id,
+        )
+        return apply_mutation(
+            spark, path, plan, corpus_id, vec_col, manifest=m_fest
+        )["appended"]
+    _sweep(spark, path)
     gens = list(m_fest["generations"])
     gen_stats = m_fest.get("gen_stats", {})
-    id_rows = index_fs.collect_id_rows(batch, corpus_id)
-    novel = None
-    st: dict | None = None
-    n_novel = -1
-    if id_rows is not None:
-        if not id_rows:
-            return 0
-        if gen_stats:
-            bounds = index_fs.stats_from_id_rows(id_rows)
-            probe_pos = [
-                (p0, p1)
-                for _, p0, p1 in id_rows
-                if p0 is not None and p1 is not None
-            ]
-            gens = [
-                g
-                for g in gens
-                if not index_fs.generation_prunable(
-                    gen_stats.get(g), bounds, probe_pos
-                )
-            ]
-        hits: set = set()
-        if gens:
-            uniq = list({i for i, _, _ in id_rows if i is not None})
-            if uniq:
-                # include_tombstoned: a deleted id stays unavailable
-                # until compaction (the LSM id-reuse hazard)
-                hits = {
-                    r["neighbor_id"]
-                    for r in _read_vectors(
-                        spark, path, {**m_fest, "generations": gens},
-                        include_tombstoned=True,
-                    )
-                    .select("neighbor_id")
-                    .filter(F.col("neighbor_id").isin(uniq))
-                    .collect()
-                }
-        novel_rows = [t for t in id_rows if t[0] not in hits]
-        n_novel = len(novel_rows)
-        if n_novel == 0:
-            return 0
-        st = index_fs.stats_from_id_rows(novel_rows)
-        novel = (
-            batch.filter(
-                index_fs.keep_ids_filter(corpus_id, sorted(hits))
-            )
-            if hits
-            else batch
-        ).persist()
-    elif len(gens) >= index_fs.GEN_PRUNE_MIN and gen_stats:
+    if len(gens) >= index_fs.GEN_PRUNE_MIN and gen_stats:
         # generation pruning for the idempotency anti-join (r12): skip
         # generations provably disjoint from the batch ids ([min,max]
         # + id Bloom — the delete/unblock machinery), gated on
@@ -555,75 +653,42 @@ def append_to_ivf_index(
             ]
         finally:
             bk.unpersist()
-    if novel is None:
-        if gens:
-            # include_tombstoned: a deleted id stays unavailable until
-            # compaction (re-admitting earlier would be killed by its
-            # own tombstone — the LSM id-reuse hazard, excluded by
-            # construction)
-            stored_ids = _read_vectors(
-                spark, path, {**m_fest, "generations": gens},
-                include_tombstoned=True,
-            ).select("neighbor_id")
-            novel = batch.join(
-                stored_ids,
-                batch[corpus_id] == stored_ids["neighbor_id"],
-                "left_anti",
-            ).persist()
-        else:
-            # every generation provably disjoint — the whole batch is
-            # novel
-            novel = batch.persist()
+    if gens:
+        # include_tombstoned: a deleted id stays unavailable until
+        # compaction (re-admitting earlier would be killed by its own
+        # tombstone — the LSM id-reuse hazard, excluded by
+        # construction)
+        stored_ids = _read_vectors(
+            spark, path, {**m_fest, "generations": gens},
+            include_tombstoned=True,
+        ).select("neighbor_id")
+        novel = batch.join(
+            stored_ids,
+            batch[corpus_id] == stored_ids["neighbor_id"],
+            "left_anti",
+        ).persist()
+    else:
+        # every generation provably disjoint — the whole batch is
+        # novel
+        novel = batch.persist()
     try:
-        if n_novel < 0:
-            # large-batch path: the count the append needs anyway +
-            # the generation's id bounds in one aggregate action
-            n_novel, st = index_fs.count_and_bounds(novel, corpus_id)
+        # the count the append needs anyway + the generation's id
+        # bounds in one aggregate action
+        n_novel, st = index_fs.count_and_bounds(novel, corpus_id)
         if n_novel == 0:
             return 0
-        cents = _read_centroids(spark, path, m_fest)
-        if meta["m"] is not None:
-            _, _, codebooks = _read_pq_codebooks(spark, path, m_fest)
-            encode = _pq_encode_udf(cents, codebooks)
-            base = novel.select(
-                F.col(corpus_id).alias("neighbor_id"),
-                F.col(vec_col).cast("array<float>").alias("cv"),
-                encode(F.col(vec_col)).alias("e"),
-            ).select(
-                "neighbor_id", "cv", F.col("e.codes").alias("codes"),
-                F.col("e.cell").alias("cell"),
-            )
-        else:
-            base = novel.select(
-                F.col(corpus_id).alias("neighbor_id"),
-                F.col(vec_col).cast("array<float>").alias("cv"),
-                _cell_assign_udf(cents, 1)(F.col(vec_col))[0].alias("cell"),
-            )
         gen = index_fs.next_gen(m_fest)
-        vec_df = base.withColumn(
-            "cn", l2_norm(as_double_array(F.col("cv")))
-        )
-        (
-            vec_df
-            .repartition("cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(f"{path}/vectors/gen={gen}")
-        )
+        vec_df = _encode(spark, path, m_fest, novel, corpus_id, vec_col)
+        _write_gen(vec_df, path, gen)
         stats = dict(m_fest.get("gen_stats", {}))
         if st:
             stats[gen] = st
         # reader schemas: carried forward by the **m spread below;
-        # BACKFILLED for pre-schema manifests where derivable (the
-        # quantizer relations are not in hand here — they stay on
-        # inference until a rebuild records them)
+        # BACKFILLED for pre-schema manifests where derivable
         schemas = m_fest.get("schemas") or index_fs.relation_schemas(
             vectors=vec_df,
             tombstones=vec_df.select("neighbor_id"),
         )
-        # the COMMIT: the generation was invisible until this line.
-        # Unknown manifest keys (sync markers, future metadata) carry
-        # forward verbatim
         index_fs.commit_manifest(
             spark, path,
             {
@@ -656,89 +721,26 @@ def delete_from_ivf_index(
     physically. Idempotent (never-indexed and already-tombstoned ids
     filter out, re-run returns 0), crash-atomic, and a tombstoned id
     stays unavailable to :func:`append_to_ivf_index` until
-    compaction.
+    compaction. Ids under the collect cap are applied by
+    :func:`apply_mutation`; takedown waves past it keep the joins
+    below.
     """
     spark = ids.sparkSession
+    sel = ids.select(F.col(corpus_id).alias("neighbor_id"))
+    id_rows = index_fs.collect_id_rows(sel, "neighbor_id")
+    if id_rows is not None:
+        plan = index_fs.IndexMutation(
+            id_type=sel.schema["neighbor_id"].dataType, gone=id_rows
+        )
+        return apply_mutation(spark, path, plan, corpus_id)["tombstoned"]
     m = _committed(spark, path)
     index_fs.sweep_orphans(
         spark, f"{path}/tombstones",
         index_fs.live_union(spark, path, "tombstones"), "g",
     )
-    blocked = (
-        ids.select(F.col(corpus_id).alias("neighbor_id")).distinct()
-    )
+    blocked = sel.distinct()
     gens = list(m["generations"])
     gen_stats = m.get("gen_stats", {})
-    # SMALL-BATCH fast path (r12 session 3, the minhash-delete
-    # mirror): collect the blocked ids once, prune generations
-    # driver-side, confirm membership with one bounded isin-pushdown
-    # scan, subtract prior tombstones with one bounded filtered read,
-    # and write the target set from a driver-built relation. Results
-    # identical; takedown waves past the cap keep the joins below.
-    id_rows = index_fs.collect_id_rows(blocked, "neighbor_id")
-    if id_rows is not None:
-        uniq = sorted({i for i, _, _ in id_rows if i is not None})
-        if not uniq:
-            return 0
-        if gen_stats:
-            bounds = index_fs.stats_from_id_rows(id_rows)
-            probe_pos = [
-                (p0, p1)
-                for _, p0, p1 in id_rows
-                if p0 is not None and p1 is not None
-            ]
-            gens = [
-                g
-                for g in gens
-                if not index_fs.generation_prunable(
-                    gen_stats.get(g), bounds, probe_pos
-                )
-            ]
-        if not gens:
-            return 0
-        hits = {
-            r["neighbor_id"]
-            for r in _read_vectors(
-                spark, path, {**m, "generations": gens},
-                include_tombstoned=True,
-            )
-            .select("neighbor_id")
-            .filter(F.col("neighbor_id").isin(uniq))
-            .collect()
-        }
-        prior_df = _read_tombstones(spark, path, m)
-        prior: set = set()
-        if prior_df is not None and hits:
-            prior = {
-                r["neighbor_id"]
-                for r in prior_df.filter(
-                    F.col("neighbor_id").isin(sorted(hits))
-                ).collect()
-            }
-        target_ids = [i for i in uniq if i in hits and i not in prior]
-        n = len(target_ids)
-        if n == 0:
-            return 0
-        target = spark.createDataFrame(
-            [(i,) for i in target_ids], blocked.schema
-        )
-        gen = index_fs.fresh_gen(spark, [f"{path}/tombstones"], None)
-        index_fs.shard_for_write(target, n).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/tombstones/{gen}")
-        schemas = dict(m.get("schemas", {}))
-        schemas.setdefault("tombstones", target.schema.json())
-        index_fs.commit_manifest(
-            spark,
-            path,
-            {
-                **{k: v for k, v in m.items() if k != "_seq"},
-                "tombstones": m.get("tombstones", []) + [gen],
-                "schemas": schemas,
-            },
-            m["_seq"],
-        )
-        return n
     # generation pruning for the stored-id semi-join (r12): mirrors
     # delete_from_minhash_index — generations PROVABLY holding none
     # of the batch ids (per-generation [min,max] + id Bloom filter,
@@ -813,21 +815,7 @@ def compact_ivf_index(spark: SparkSession, path: str) -> None:
     superseded directories are swept after the manifest lands.
     """
     m = _committed(spark, path)
-    live = index_fs.live_unions(
-        spark, path, ("generations", "quantizer", "tombstones")
-    )
-    index_fs.sweep_orphans(
-        spark,
-        f"{path}/vectors",
-        {f"gen={g}" for g in live["generations"]},
-        "gen=",
-    )
-    index_fs.sweep_orphans(
-        spark, f"{path}/quantizer", live["quantizer"], "g"
-    )
-    index_fs.sweep_orphans(
-        spark, f"{path}/tombstones", live["tombstones"], "g"
-    )
+    _sweep(spark, path)
     gen = index_fs.fresh_gen(spark, [f"{path}/vectors"], m)
     live = _read_vectors(spark, path, m)
     (
@@ -873,23 +861,7 @@ def vacuum_ivf_index(
     time travel to a dropped version errors loudly afterwards.
     Writer-context only."""
     dropped = index_fs.drop_manifests(spark, path, keep_versions)
-    live = index_fs.live_unions(
-        spark, path, ("generations", "quantizer", "tombstones")
-    )
-    swept = []
-    swept += index_fs.sweep_orphans(
-        spark,
-        f"{path}/vectors",
-        {f"gen={g}" for g in live["generations"]},
-        "gen=",
-    )
-    swept += index_fs.sweep_orphans(
-        spark, f"{path}/quantizer", live["quantizer"], "g"
-    )
-    swept += index_fs.sweep_orphans(
-        spark, f"{path}/tombstones", live["tombstones"], "g"
-    )
-    return {"dropped_versions": dropped, "swept_dirs": swept}
+    return {"dropped_versions": dropped, "swept_dirs": _sweep(spark, path)}
 
 
 def unblock_ivf_ids(
@@ -904,91 +876,50 @@ def unblock_ivf_ids(
     and the targeted alternative to :func:`compact_ivf_index`.
 
     Candidate generations are pruned against the manifest's
-    per-generation [min,max] id stats (``gen_stats``), confirmed with
-    one skinny semi-join each; confirmed generations are rewritten
-    minus the blocked rows (same cell-partitioned layout, FROZEN
-    quantizer untouched), and the tombstone set is rewritten without
-    the freed ids. Untouched generations keep their directories and
-    manifest names. Returns ``{"unblocked",
-    "rewritten_generations", "candidate_generations"}``; idempotent and crash-atomic like
-    every index mutation.
+    per-generation [min,max] id stats and id filters (``gen_stats``),
+    confirmed with one census job; confirmed generations are
+    rewritten minus the blocked rows (same cell-partitioned layout,
+    FROZEN quantizer untouched), and the tombstone sets holding the
+    freed ids are rewritten without them. Untouched generations keep
+    their directories and manifest names. Returns ``{"unblocked",
+    "rewritten_generations", "candidate_generations"}``; idempotent
+    and crash-atomic like every index mutation. Ids under the collect
+    cap are applied by :func:`apply_mutation`; larger sets keep the
+    join formulation below.
     """
+    sel = ids.select(F.col(corpus_id).alias("neighbor_id"))
+    id_rows = index_fs.collect_id_rows(sel, "neighbor_id")
+    if id_rows is not None:
+        plan = index_fs.IndexMutation(
+            id_type=sel.schema["neighbor_id"].dataType, free=id_rows
+        )
+        r = apply_mutation(spark, path, plan, corpus_id)
+        return {
+            k: r[k]
+            for k in ("unblocked", "rewritten_generations",
+                      "candidate_generations")
+        }
     m = _committed(spark, path)
     tombs = _read_tombstones(spark, path, m)
     if tombs is None:
         return {"unblocked": 0, "rewritten_generations": [],
                 "candidate_generations": 0}
-    # SMALL-BATCH fast path (r12 session 3, the minhash-unblock
-    # mirror): collect the incoming ids once and intersect with the
-    # tombstones via one bounded isin-filtered read — blocked set,
-    # count, bounds and probe positions derive driver-side; the
-    # census and rewrites then consume a driver-built literal
-    # relation / plain filters. Past the cap, the join formulation.
-    blocked_ids: list | None = None
-    id_rows = index_fs.collect_id_rows(
-        ids.select(F.col(corpus_id).alias("neighbor_id")),
-        "neighbor_id",
+    blocked = (
+        sel.distinct().join(tombs, "neighbor_id", "left_semi").persist()
     )
-    if id_rows is not None:
-        uniq = sorted({i for i, _, _ in id_rows if i is not None})
-        hit = (
-            {
-                r["neighbor_id"]
-                for r in tombs.filter(
-                    F.col("neighbor_id").isin(uniq)
-                ).collect()
-            }
-            if uniq
-            else set()
-        )
-        blocked_ids = [i for i in uniq if i in hit]
-        if not blocked_ids:
-            return {"unblocked": 0, "rewritten_generations": [],
-                    "candidate_generations": 0}
-        blocked = spark.createDataFrame(
-            [(i,) for i in blocked_ids],
-            ids.select(F.col(corpus_id).alias("neighbor_id")).schema,
-        ).persist()
-    else:
-        blocked = (
-            ids.select(F.col(corpus_id).alias("neighbor_id"))
-            .distinct()
-            .join(tombs, "neighbor_id", "left_semi")
-            .persist()
-        )
     try:
         gen_stats = m.get("gen_stats", {})
-        if blocked_ids is not None:
-            n = len(blocked_ids)
-            rows_b = [
-                t for t in id_rows if t[0] in set(blocked_ids)
-            ]
-            st_b = index_fs.stats_from_id_rows(rows_b)
-            bounds = (
-                {"min_id": st_b["min_id"], "max_id": st_b["max_id"]}
-                if st_b
-                else None
-            )
-            probe_pos = [
-                (p0, p1)
-                for _, p0, p1 in rows_b
-                if p0 is not None and p1 is not None
-            ] or None
-        else:
-            # one action: blocked count + its id bounds + its bitmap
-            # for stats pruning
-            n, bounds = index_fs.count_and_bounds(
-                blocked, "neighbor_id"
-            )
-            if n == 0:
-                return {"unblocked": 0, "rewritten_generations": [],
+        # one action: blocked count + its id bounds + its bitmap for
+        # stats pruning
+        n, bounds = index_fs.count_and_bounds(blocked, "neighbor_id")
+        if n == 0:
+            return {"unblocked": 0, "rewritten_generations": [],
                     "candidate_generations": 0}
-            # per-id filter probe (bounded collect; see
-            # unblock_minhash_ids) — content pruning for interleaved
-            # ids
-            probe_pos = index_fs.filter_probe_positions(
-                blocked, "neighbor_id"
-            )
+        # per-id filter probe (bounded collect; see
+        # unblock_minhash_ids) — content pruning for interleaved ids
+        probe_pos = index_fs.filter_probe_positions(
+            blocked, "neighbor_id"
+        )
         candidates = [
             g
             for g in m["generations"]
@@ -998,8 +929,6 @@ def unblock_ivf_ids(
         ]
         # ONE job: affected + fully-blocked census over all candidate
         # generations (see unblock_minhash_ids)
-        from functools import reduce
-
         affected: list[str] = []
         fully_blocked: set[str] = set()
         if candidates:
@@ -1026,23 +955,12 @@ def unblock_ivf_ids(
                 for r in census
                 if r["_hit"] and r["_hit"] == r["_total"]
             }
-        import re as _re
-
-        nums = [-1] + [int(g[1:]) for g in m["generations"]]
-        for parent in (f"{path}/vectors", f"{path}/quantizer",
-                       f"{path}/tombstones"):
-            for name in index_fs.list_names(spark, parent):
-                mm = _re.search(r"g(\d{6})$", name)
-                if mm:
-                    nums.append(int(mm.group(1)))
-        counter = 1 + max(nums)
-
-        def alloc() -> str:
-            nonlocal counter
-            g = "g%06d" % counter
-            counter += 1
-            return g
-
+        alloc = index_fs.name_allocator(
+            spark,
+            [f"{path}/vectors", f"{path}/quantizer",
+             f"{path}/tombstones"],
+            m,
+        )
         mapping: dict[str, str | None] = {}
         for g in affected:
             # fully-blocked generation → drop it from the manifest
@@ -1052,29 +970,15 @@ def unblock_ivf_ids(
                 mapping[g] = None
                 continue
             gnew = alloc()
-            src_gen = _pinned_gen_read(spark, path, m, [g]).drop("gen")
-            kept = (
-                src_gen.filter(
-                    index_fs.keep_ids_filter(
-                        "neighbor_id", blocked_ids
-                    )
-                )
-                if blocked_ids is not None
-                else src_gen.join(blocked, "neighbor_id", "left_anti")
-            )
-            (
-                kept.repartition("cell")
-                .write.mode("overwrite")
-                .partitionBy("cell")
-                .parquet(f"{path}/vectors/gen={gnew}")
+            _write_gen(
+                _pinned_gen_read(spark, path, m, [g])
+                .drop("gen")
+                .join(blocked, "neighbor_id", "left_anti"),
+                path, gnew,
             )
             mapping[g] = gnew
-        remaining = (
-            tombs.filter(
-                index_fs.keep_ids_filter("neighbor_id", blocked_ids)
-            )
-            if blocked_ids is not None
-            else tombs.join(blocked, "neighbor_id", "left_anti")
+        remaining = tombs.join(
+            blocked, "neighbor_id", "left_anti"
         ).persist()
         try:
             new_tombs: list[str] = []

@@ -67,6 +67,8 @@ of a fresh build over the union corpus (tested).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -115,26 +117,7 @@ def _committed(
     return m
 
 
-def _pinned_read(
-    spark: SparkSession, m: dict, rel: str, *paths: str
-) -> DataFrame:
-    """Parquet read with the manifest-recorded schema for ``rel``
-    when present — planning then costs ZERO Spark jobs, where schema
-    inference over a multi-file relation runs a distributed
-    footer-read job per ``spark.read.parquet`` call (measured: one
-    job per unpinned read site; at 100 TB the footer sweep is real
-    work, repeated on every probe/mutation). Falls back to inference
-    for manifests committed before schemas were recorded — mutations
-    backfill the entry, so old indexes heal on their next write."""
-    import json as _json
-
-    from pyspark.sql.types import StructType
-
-    s = m.get("schemas", {}).get(rel)
-    reader = spark.read
-    if s:
-        reader = reader.schema(StructType.fromJson(_json.loads(s)))
-    return reader.parquet(*paths)
+_pinned_read = index_fs.pinned_read
 
 
 def _read_postings(spark: SparkSession, path: str, m: dict) -> DataFrame:
@@ -299,6 +282,221 @@ def build_minhash_index(
         shingled.unpersist()
 
 
+def _sweep(spark: SparkSession, path: str) -> list[str]:
+    """Sweep data/sizes/tombstone directories no manifest names — the
+    debris of a crashed writer. Committed = the UNION over all
+    manifests, not just the newest: older versions stay time-travel
+    readable until compaction or vacuum. Returns the swept names."""
+    live = index_fs.live_unions(
+        spark, path, ("generations", "sizes", "tombstones")
+    )
+    return (
+        index_fs.sweep_orphans(
+            spark, f"{path}/data", live["generations"], "g"
+        )
+        + index_fs.sweep_orphans(spark, f"{path}/sizes", live["sizes"], "g")
+        + index_fs.sweep_orphans(
+            spark, f"{path}/tombstones", live["tombstones"], "g"
+        )
+    )
+
+
+def apply_mutation(
+    spark: SparkSession,
+    path: str,
+    plan: index_fs.IndexMutation,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    manifest: dict | None = None,
+) -> dict:
+    """Apply one driver-planned mutation (tombstone ``plan.gone``,
+    free ``plan.free``, append ``plan.rows`` — columns ``id_col``,
+    ``text_col``) as ONE commit — the core behind the small-batch
+    arms of :func:`append_to_minhash_index`,
+    :func:`delete_from_minhash_index` and :func:`unblock_minhash_ids`
+    and behind the CDC index sync.
+
+    One manifest-history read sweeps orphans; generations the
+    manifest's stats prove disjoint from every planned id are never
+    opened; ONE generation-tagged membership read
+    (:func:`~sqltask_spark.operators.index_fs.tagged_membership`)
+    tells, for every planned id, whether it is stored, in which
+    generation, and whether it is tombstoned. Each relation is then
+    written at most once: the generations holding freed ids,
+    rewritten without them; one tombstone set; one appended
+    generation; one sizes version (minus the dropped postings, plus
+    the new ones). The commit is one manifest, carrying
+    ``plan.synced`` — a crash anywhere before it leaves the index
+    exactly as it was.
+
+    Returns ``{"tombstoned", "appended", "unblocked",
+    "rewritten_generations", "candidate_generations"}`` — the counts
+    delete, unblock and append would return applied one after
+    another.
+    """
+    m = manifest if manifest is not None else _committed(spark, path)
+    _sweep(spark, path)
+    census = index_fs.take_census(
+        plan,
+        m,
+        lambda g: _pinned_read(
+            spark, m, "shingles", f"{path}/data/{g}/shingles"
+        ),
+        lambda t: _pinned_read(
+            spark, m, "tombstones", f"{path}/tombstones/{t}"
+        ),
+        "id",
+    )
+    if census.changes_nothing() and not plan.synced:
+        return census.counts()
+    alloc = index_fs.name_allocator(
+        spark,
+        [f"{path}/data", f"{path}/sizes", f"{path}/tombstones"],
+        m,
+    )
+    gens = list(m["generations"])
+    stats = dict(m.get("gen_stats", {}))
+    schemas = dict(m.get("schemas", {}))
+    removed = sorted(census.removed)
+    for g in census.affected:
+        st = stats.pop(g, None)
+        if census.fully_removed(g):
+            # every row goes: drop the generation instead of writing
+            # an empty (hence unreadable) directory
+            gens.remove(g)
+            continue
+        gnew = alloc()
+        for rel in ("postings", "shingles"):
+            _pinned_read(spark, m, rel, f"{path}/data/{g}/{rel}").filter(
+                index_fs.keep_ids_filter("id", removed)
+            ).write.mode("overwrite").parquet(f"{path}/data/{gnew}/{rel}")
+        gens[gens.index(g)] = gnew
+        if st:
+            # a conservative superset range stays valid for pruning
+            stats[gnew] = st
+    tombs, tomb_schema = index_fs.write_tombstones(
+        spark, path, m, census, "id", plan.id_type, alloc
+    )
+    if tomb_schema is not None:
+        schemas.setdefault("tombstones", tomb_schema.json())
+    # sizes deltas, one row per posting: -1 for each the rewrites
+    # dropped, +1 for each appended — folded into ONE new sizes
+    # version by one aggregate
+    deltas = []
+    if census.affected:
+        deltas.append(
+            _pinned_read(
+                spark, m, "postings",
+                *[f"{path}/data/{g}/postings" for g in census.affected],
+            )
+            .filter(F.col("id").isin(removed))
+            .select("band", "band_hash",
+                    F.lit(-1).cast("long").alias("bucket_size"))
+        )
+    bsh = banded = None
+    try:
+        if census.novel:
+            meta = m["params"]
+            skip = sorted(
+                census.stored & {t[0] for t in plan.row_ids}
+            )
+            novel = (
+                plan.rows.filter(index_fs.keep_ids_filter(id_col, skip))
+                if skip
+                else plan.rows
+            )
+            # size the CPU-spread guard to the KNOWN batch (~256 docs
+            # per task): repartitioning a 1-row window into the
+            # session's partitions is an exchange of pure overhead
+            mp = max(
+                1,
+                min(
+                    spark.sparkContext.defaultParallelism,
+                    -(-len(census.novel) // 256),
+                ),
+            )
+            bsh = shingled_docs(
+                novel, id_col, text_col, meta["shingle_n"],
+                min_partitions=mp,
+            ).persist()
+            gen = alloc()
+            wide = _signatures_wide(bsh, meta["num_perm"], meta["seed"])
+            banded = _banded_signatures(
+                wide, meta["bands"], meta["num_perm"] // meta["bands"]
+            ).persist()
+            banded.write.mode("overwrite").parquet(
+                f"{path}/data/{gen}/postings"
+            )
+            bsh.write.mode("overwrite").parquet(
+                f"{path}/data/{gen}/shingles"
+            )
+            new_sizes = banded.select(
+                "band", "band_hash",
+                F.lit(1).cast("long").alias("bucket_size"),
+            )
+            deltas.append(new_sizes)
+            gens.append(gen)
+            st = index_fs.stats_from_id_rows(census.novel)
+            if st:
+                stats[gen] = st
+            # BACKFILL reader schemas for pre-schema manifests (every
+            # relation's schema is in hand) — old indexes heal here
+            for rel, df in (
+                ("postings", banded), ("shingles", bsh),
+                ("sizes", new_sizes), ("tombstones", bsh.select("id")),
+            ):
+                schemas.setdefault(rel, df.schema.json())
+        sizes = m["sizes"]
+        if deltas:
+            # a NEW version directory — the committed one is never
+            # touched — and never a driver collect (the sizes relation
+            # is bucket-count-sized, corpus-scaled at 100 TB)
+            sizes = alloc()
+            (
+                reduce(
+                    DataFrame.unionByName,
+                    [_read_sizes(spark, path, m)] + deltas,
+                )
+                .groupBy("band", "band_hash")
+                .agg(F.sum("bucket_size").cast("long").alias("bucket_size"))
+                .filter(F.col("bucket_size") > 0)
+                .write.mode("overwrite")
+                .parquet(f"{path}/sizes/{sizes}")
+            )
+        if not gens:
+            raise ValueError(
+                f"mutation would leave {path} with zero generations"
+                " (every stored row is freed) — rebuild the index"
+                " instead"
+            )
+        # the COMMIT: everything above was invisible until this line.
+        # Unknown manifest keys (sync markers, future metadata) carry
+        # forward verbatim — a mutation must never strip another
+        # subsystem's state
+        new_m = {
+            **{k: v for k, v in m.items() if k != "_seq"},
+            "generations": gens,
+            "sizes": sizes,
+            "tombstones": tombs,
+            "gen_stats": stats,
+            "schemas": schemas,
+            "batches": m.get("batches", [])
+            + ([plan.batch_id] if plan.batch_id else []),
+        }
+        if plan.synced:
+            new_m["synced"] = {**m.get("synced", {}), **plan.synced}
+        index_fs.commit_manifest(spark, path, new_m, m["_seq"])
+        return census.counts()
+    finally:
+        # release BOTH caches on every exit — a crash between the
+        # postings write and the commit must not leak the banded
+        # signatures for the session
+        if banded is not None:
+            banded.unpersist()
+        if bsh is not None:
+            bsh.unpersist()
+
+
 def append_to_minhash_index(
     path: str,
     batch: DataFrame,
@@ -330,50 +528,41 @@ def append_to_minhash_index(
     anti-join recheck stays the correctness backstop for un-ledgered
     callers and for ids trimmed past the retention horizon
     (:func:`~sqltask_spark.operators.index_fs.trim_batches`).
+
+    A batch under the collect cap (one narrow job: ids + filter-bit
+    positions) is applied by :func:`apply_mutation` — a bounded
+    isin membership read instead of the distinct + anti-join
+    exchanges; larger batches keep the join formulation below.
     """
     spark = batch.sparkSession
     m = _committed(spark, path)
     if batch_id is not None and batch_id in m.get("batches", []):
         return 0
-    # sweep debris of a previously crashed append (uncommitted dirs).
-    # Committed = the UNION over all manifests, not just the newest:
-    # older versions stay time-travel readable until compaction
-    live = index_fs.live_unions(
-        spark, path, ("generations", "sizes", "tombstones")
-    )
-    index_fs.sweep_orphans(
-        spark, f"{path}/data", live["generations"], "g"
-    )
-    index_fs.sweep_orphans(spark, f"{path}/sizes", live["sizes"], "g")
-    index_fs.sweep_orphans(
-        spark, f"{path}/tombstones", live["tombstones"], "g"
-    )
+    id_rows = index_fs.collect_id_rows(batch, id_col)
+    if id_rows is not None:
+        plan = index_fs.IndexMutation(
+            id_type=batch.schema[id_col].dataType,
+            rows=batch, row_ids=id_rows, batch_id=batch_id,
+        )
+        return apply_mutation(
+            spark, path, plan, id_col, text_col, manifest=m
+        )["appended"]
+    _sweep(spark, path)
     meta = m["params"]
-    # SMALL-BATCH fast path (r12 session 3, guide §1.2): a batch
-    # under the collect cap is pulled to the driver ONCE (ids +
-    # filter-bit positions, one narrow job) and everything per-batch
-    # derives from it — generation pruning (no extra stats jobs), the
-    # idempotency check (one bounded membership scan with an isin
-    # pushdown instead of distinct + anti-join exchanges), the novel
-    # count and the manifest stats (driver-side fold, dropping the
-    # count_and_bounds aggregate job). Results identical; larger
-    # batches keep the join formulation below.
     gens = list(m["generations"])
     gen_stats = m.get("gen_stats", {})
-    id_rows = index_fs.collect_id_rows(batch, id_col)
-    novel = None
-    st: dict | None = None
-    n_novel = -1
-    if id_rows is not None:
-        if not id_rows:
-            return 0
-        if gen_stats:
-            bounds = index_fs.stats_from_id_rows(id_rows)
-            probe_pos = [
-                (p0, p1)
-                for _, p0, p1 in id_rows
-                if p0 is not None and p1 is not None
-            ]
+    # generation pruning for the idempotency anti-join (r12): the
+    # join exists to drop already-indexed ids, so generations
+    # PROVABLY holding none of the batch ids ([min,max] + id Bloom —
+    # the delete/unblock machinery) need not be read at all. Gated on
+    # generation count like the delete path: two batch-sized stats
+    # jobs buy a pruned corpus-id scan only once the index has
+    # accumulated generations worth skipping.
+    if len(gens) >= index_fs.GEN_PRUNE_MIN and gen_stats:
+        bk = batch.select(F.col(id_col).alias("id")).distinct().persist()
+        try:
+            _, bounds = index_fs.count_and_bounds(bk, "id")
+            probe_pos = index_fs.filter_probe_positions(bk, "id")
             gens = [
                 g
                 for g in gens
@@ -381,88 +570,27 @@ def append_to_minhash_index(
                     gen_stats.get(g), bounds, probe_pos
                 )
             ]
-        hits: set = set()
-        if gens:
-            uniq = list({i for i, _, _ in id_rows if i is not None})
-            if uniq:
-                hits = {
-                    r["id"]
-                    for r in _read_shingles(
-                        spark, path, {**m, "generations": gens}
-                    )
-                    .select("id")
-                    .filter(F.col("id").isin(uniq))
-                    .collect()
-                }
-        novel_rows = [t for t in id_rows if t[0] not in hits]
-        n_novel = len(novel_rows)
-        if n_novel == 0:
-            return 0
-        st = index_fs.stats_from_id_rows(novel_rows)
-        novel = (
-            batch.filter(index_fs.keep_ids_filter(id_col, sorted(hits)))
-            if hits
-            else batch
+        finally:
+            bk.unpersist()
+    if gens:
+        stored_ids = (
+            _read_shingles(spark, path, {**m, "generations": gens})
+            .select("id")
+            .distinct()
         )
-        # size the CPU-spread guard to the KNOWN batch (~256 docs per
-        # task): repartitioning a 1-row window into the session's 32
-        # partitions is an exchange + 32-task stages of pure overhead
-        mp = max(
-            1,
-            min(
-                spark.sparkContext.defaultParallelism,
-                -(-n_novel // 256),
-            ),
+        novel = batch.join(
+            stored_ids, batch[id_col] == stored_ids["id"], "left_anti"
         )
     else:
-        # generation pruning for the idempotency anti-join (r12): the
-        # join exists to drop already-indexed ids, so generations
-        # PROVABLY holding none of the batch ids ([min,max] + id
-        # Bloom — the delete/unblock machinery) need not be read at
-        # all. Gated on generation count like the delete path: two
-        # batch-sized stats jobs buy a pruned corpus-id scan only
-        # once the index has accumulated generations worth skipping.
-        if len(gens) >= index_fs.GEN_PRUNE_MIN and gen_stats:
-            bk = batch.select(
-                F.col(id_col).alias("id")
-            ).distinct().persist()
-            try:
-                _, bounds = index_fs.count_and_bounds(bk, "id")
-                probe_pos = index_fs.filter_probe_positions(bk, "id")
-                gens = [
-                    g
-                    for g in gens
-                    if not index_fs.generation_prunable(
-                        gen_stats.get(g), bounds, probe_pos
-                    )
-                ]
-            finally:
-                bk.unpersist()
-        if gens:
-            stored_ids = (
-                _read_shingles(spark, path, {**m, "generations": gens})
-                .select("id")
-                .distinct()
-            )
-            novel = batch.join(
-                stored_ids, batch[id_col] == stored_ids["id"],
-                "left_anti",
-            )
-        else:
-            # every generation provably disjoint from the batch — the
-            # whole batch is novel
-            novel = batch
-        mp = None
-    bsh = shingled_docs(
-        novel, id_col, text_col, meta["shingle_n"],
-        min_partitions=mp if id_rows is not None else None,
-    ).persist()
+        # every generation provably disjoint from the batch — the
+        # whole batch is novel
+        novel = batch
+    bsh = shingled_docs(novel, id_col, text_col, meta["shingle_n"]).persist()
     banded = None
     try:
-        if n_novel < 0:
-            # large-batch path: the count the append needs anyway +
-            # the generation's id bounds in one aggregate action
-            n_novel, st = index_fs.count_and_bounds(bsh, "id")
+        # the count the append needs anyway + the generation's id
+        # bounds in one aggregate action
+        n_novel, st = index_fs.count_and_bounds(bsh, "id")
         if n_novel == 0:
             return 0
         gen = index_fs.next_gen(m)
@@ -478,10 +606,7 @@ def append_to_minhash_index(
             F.count(F.lit(1)).cast("long").alias("bucket_size")
         )
         # merged sizes go to a NEW version directory — the committed
-        # one is never touched (the old in-place swap both raced its
-        # own read plan and tore under a crash), and never a driver
-        # collect (the sizes relation is bucket-count-sized —
-        # corpus-scaled at 100 TB)
+        # one is never touched, and never a driver collect
         (
             _read_sizes(spark, path, m)
             .unionByName(new_sizes)
@@ -494,16 +619,11 @@ def append_to_minhash_index(
         if st:
             stats[gen] = st
         # reader schemas: carried forward by the **m spread below;
-        # BACKFILLED here for pre-schema manifests (every relation's
-        # schema is in hand), so an old index heals on its next append
+        # BACKFILLED here for pre-schema manifests
         schemas = m.get("schemas") or index_fs.relation_schemas(
             postings=banded, shingles=bsh, sizes=new_sizes,
             tombstones=bsh.select("id"),
         )
-        # the COMMIT: everything above was invisible until this line.
-        # Unknown manifest keys (sync markers, future metadata) are
-        # carried forward verbatim — a mutation must never strip
-        # another subsystem's state
         index_fs.commit_manifest(
             spark,
             path,
@@ -520,10 +640,6 @@ def append_to_minhash_index(
         )
         return n_novel
     finally:
-        # release BOTH caches on every exit — a crash between the
-        # postings write and the commit must not leak the banded
-        # signatures for the session (the calibration-entry leak
-        # class, ADVICE r8)
         if banded is not None:
             banded.unpersist()
         bsh.unpersist()
@@ -547,87 +663,26 @@ def delete_from_minhash_index(
     UNAVAILABLE to :func:`append_to_minhash_index` until compaction —
     re-admitting it earlier would be killed by its own tombstone
     (the classic LSM id-reuse hazard, excluded by construction).
+
+    Ids under the collect cap are applied by :func:`apply_mutation`;
+    takedown waves past it keep the join formulation below.
     """
     spark = ids.sparkSession
+    sel = ids.select(F.col(id_col).alias("id"))
+    id_rows = index_fs.collect_id_rows(sel, "id")
+    if id_rows is not None:
+        plan = index_fs.IndexMutation(
+            id_type=sel.schema["id"].dataType, gone=id_rows
+        )
+        return apply_mutation(spark, path, plan)["tombstoned"]
     m = _committed(spark, path)
     index_fs.sweep_orphans(
         spark, f"{path}/tombstones",
         index_fs.live_union(spark, path, "tombstones"), "g",
     )
-    blocked = ids.select(F.col(id_col).alias("id")).distinct()
+    blocked = sel.distinct()
     gens = list(m["generations"])
     gen_stats = m.get("gen_stats", {})
-    # SMALL-BATCH fast path (r12 session 3): collect the blocked ids
-    # once (one narrow job), prune generations driver-side, confirm
-    # membership with one bounded isin-pushdown scan, subtract prior
-    # tombstones with one bounded filtered read, and write the target
-    # set from a driver-built relation — replacing the distinct/
-    # semi-join/anti-join/count formulation (4-5 AQE stage jobs per
-    # delete, per CDC epoch). Identical results; takedown waves past
-    # the cap keep the join formulation below.
-    id_rows = index_fs.collect_id_rows(blocked, "id")
-    if id_rows is not None:
-        uniq = sorted({i for i, _, _ in id_rows if i is not None})
-        if not uniq:
-            return 0
-        if gen_stats:
-            bounds = index_fs.stats_from_id_rows(id_rows)
-            probe_pos = [
-                (p0, p1)
-                for _, p0, p1 in id_rows
-                if p0 is not None and p1 is not None
-            ]
-            gens = [
-                g
-                for g in gens
-                if not index_fs.generation_prunable(
-                    gen_stats.get(g), bounds, probe_pos
-                )
-            ]
-        if not gens:
-            return 0
-        hits = {
-            r["id"]
-            for r in _read_shingles(
-                spark, path, {**m, "generations": gens}
-            )
-            .select("id")
-            .filter(F.col("id").isin(uniq))
-            .collect()
-        }
-        prior_df = _read_tombstones(spark, path, m)
-        prior: set = set()
-        if prior_df is not None and hits:
-            prior = {
-                r["id"]
-                for r in prior_df.filter(
-                    F.col("id").isin(sorted(hits))
-                ).collect()
-            }
-        target_ids = [i for i in uniq if i in hits and i not in prior]
-        n = len(target_ids)
-        if n == 0:
-            return 0
-        target = spark.createDataFrame(
-            [(i,) for i in target_ids], blocked.schema
-        )
-        gen = index_fs.fresh_gen(spark, [f"{path}/tombstones"], None)
-        index_fs.shard_for_write(target, n).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/tombstones/{gen}")
-        schemas = dict(m.get("schemas", {}))
-        schemas.setdefault("tombstones", target.schema.json())
-        index_fs.commit_manifest(
-            spark,
-            path,
-            {
-                **{k: v for k, v in m.items() if k != "_seq"},
-                "tombstones": m.get("tombstones", []) + [gen],
-                "schemas": schemas,
-            },
-            m["_seq"],
-        )
-        return n
     # generation pruning for the stored-id semi-join (r12): the join
     # exists to drop never-indexed ids, so generations PROVABLY
     # holding none of the batch ids (per-generation [min,max] + id
@@ -704,16 +759,7 @@ def compact_minhash_index(spark: SparkSession, path: str) -> None:
     are swept once it has.
     """
     m = _committed(spark, path)
-    live = index_fs.live_unions(
-        spark, path, ("generations", "sizes", "tombstones")
-    )
-    index_fs.sweep_orphans(
-        spark, f"{path}/data", live["generations"], "g"
-    )
-    index_fs.sweep_orphans(spark, f"{path}/sizes", live["sizes"], "g")
-    index_fs.sweep_orphans(
-        spark, f"{path}/tombstones", live["tombstones"], "g"
-    )
+    _sweep(spark, path)
     gen = index_fs.fresh_gen(
         spark, [f"{path}/data", f"{path}/sizes"], m
     )
@@ -781,20 +827,7 @@ def vacuum_minhash_index(
     newest committed state is untouched (probe-invariance
     pytest-pinned). Writer-context only, like every mutation."""
     dropped = index_fs.drop_manifests(spark, path, keep_versions)
-    live = index_fs.live_unions(
-        spark, path, ("generations", "sizes", "tombstones")
-    )
-    swept = []
-    swept += index_fs.sweep_orphans(
-        spark, f"{path}/data", live["generations"], "g"
-    )
-    swept += index_fs.sweep_orphans(
-        spark, f"{path}/sizes", live["sizes"], "g"
-    )
-    swept += index_fs.sweep_orphans(
-        spark, f"{path}/tombstones", live["tombstones"], "g"
-    )
-    return {"dropped_versions": dropped, "swept_dirs": swept}
+    return {"dropped_versions": dropped, "swept_dirs": _sweep(spark, path)}
 
 
 def unblock_minhash_ids(
@@ -811,15 +844,16 @@ def unblock_minhash_ids(
 
     Work is bounded by the AFFECTED generations: candidates are
     pruned first against the manifest's per-generation [min,max] id
-    stats (``gen_stats`` — no read at all when the ranges are
-    provably disjoint), then confirmed by ONE census job over all
-    candidates at once; only confirmed generations are rewritten
-    (their rows minus the blocked ids), the sizes relation is
-    adjusted by subtracting exactly the dropped postings' bucket
-    counts, and the tombstone set is rewritten without the freed ids.
-    Untouched generations keep their directories AND their manifest
-    names, so the commit is one manifest write naming mostly-old
-    files — the Iceberg-style partial-rewrite shape.
+    stats and id filters (``gen_stats`` — no read at all when they
+    prove a generation disjoint), then confirmed by ONE census job
+    over all candidates at once; only confirmed generations are
+    rewritten (their rows minus the blocked ids), the sizes relation
+    is adjusted by subtracting exactly the dropped postings' bucket
+    counts, and the tombstone sets holding the freed ids are
+    rewritten without them. Untouched generations keep their
+    directories AND their manifest names, so the commit is one
+    manifest write naming mostly-old files — the Iceberg-style
+    partial-rewrite shape.
 
     Returns ``{"unblocked", "rewritten_generations",
     "candidate_generations"}``. Idempotent
@@ -827,82 +861,41 @@ def unblock_minhash_ids(
     crash-atomic like every mutation: the new directories are
     invisible until the manifest lands, and superseded directories
     stay readable for time travel until the next compaction sweeps
-    them.
+    them. Ids under the collect cap are applied by
+    :func:`apply_mutation`; larger sets keep the join formulation
+    below.
     """
+    sel = ids.select(F.col(id_col).alias("id"))
+    id_rows = index_fs.collect_id_rows(sel, "id")
+    if id_rows is not None:
+        plan = index_fs.IndexMutation(
+            id_type=sel.schema["id"].dataType, free=id_rows
+        )
+        r = apply_mutation(spark, path, plan)
+        return {
+            k: r[k]
+            for k in ("unblocked", "rewritten_generations",
+                      "candidate_generations")
+        }
     m = _committed(spark, path)
     tombs = _read_tombstones(spark, path, m)
     if tombs is None:
         return {"unblocked": 0, "rewritten_generations": [],
                 "candidate_generations": 0}
-    # SMALL-BATCH fast path (r12 session 3): collect the incoming ids
-    # once (one narrow job) and intersect with the tombstones via one
-    # bounded isin-filtered read — the blocked set, its count, bounds
-    # and probe positions all derive driver-side, dropping the
-    # distinct+semi-join persist, the count_and_bounds aggregate and
-    # the positions collect (3-4 AQE stage jobs per sync epoch). The
-    # blocked relation the census and rewrites consume is then a
-    # driver-built literal; results identical. Past the cap, the join
-    # formulation below.
-    blocked_ids: list | None = None
-    id_rows = index_fs.collect_id_rows(
-        ids.select(F.col(id_col).alias("id")), "id"
-    )
-    if id_rows is not None:
-        uniq = sorted({i for i, _, _ in id_rows if i is not None})
-        hit = (
-            {
-                r["id"]
-                for r in tombs.filter(F.col("id").isin(uniq)).collect()
-            }
-            if uniq
-            else set()
-        )
-        blocked_ids = [i for i in uniq if i in hit]
-        if not blocked_ids:
+    blocked = sel.distinct().join(tombs, "id", "left_semi").persist()
+    try:
+        # one action: blocked count + its id bounds + its bitmap for
+        # stats pruning
+        n, bounds = index_fs.count_and_bounds(blocked, "id")
+        if n == 0:
             return {"unblocked": 0, "rewritten_generations": [],
                     "candidate_generations": 0}
-        blocked = spark.createDataFrame(
-            [(i,) for i in blocked_ids],
-            ids.select(F.col(id_col).alias("id")).schema,
-        ).persist()
-    else:
-        blocked = (
-            ids.select(F.col(id_col).alias("id"))
-            .distinct()
-            .join(tombs, "id", "left_semi")
-            .persist()
-        )
-    try:
-        if blocked_ids is not None:
-            n = len(blocked_ids)
-            rows_b = [
-                t for t in id_rows if t[0] in set(blocked_ids)
-            ]
-            st_b = index_fs.stats_from_id_rows(rows_b)
-            bounds = (
-                {"min_id": st_b["min_id"], "max_id": st_b["max_id"]}
-                if st_b
-                else None
-            )
-            probe_pos = [
-                (p0, p1)
-                for _, p0, p1 in rows_b
-                if p0 is not None and p1 is not None
-            ] or None
-        else:
-            # one action: blocked count + its id bounds + its bitmap
-            # for stats pruning
-            n, bounds = index_fs.count_and_bounds(blocked, "id")
-            if n == 0:
-                return {"unblocked": 0, "rewritten_generations": [],
-                    "candidate_generations": 0}
-            # per-id filter probe: bounded collect of hash positions
-            # (a set past the cap falls back to the
-            # bitmap-intersection test inside generation_prunable).
-            # Under hashed/interleaved ids the [min,max] ranges all
-            # overlap; the CONTENT filter is what keeps the census
-            # off untouched generations then.
-            probe_pos = index_fs.filter_probe_positions(blocked, "id")
+        # per-id filter probe: bounded collect of hash positions (a
+        # set past the cap falls back to the bitmap-intersection test
+        # inside generation_prunable). Under hashed/interleaved ids
+        # the [min,max] ranges all overlap; the CONTENT filter is what
+        # keeps the census off untouched generations then.
+        probe_pos = index_fs.filter_probe_positions(blocked, "id")
         gen_stats = m.get("gen_stats", {})
         candidates = [
             g
@@ -914,10 +907,7 @@ def unblock_minhash_ids(
         # ONE job decides, for every candidate generation at once,
         # whether it holds blocked rows AND whether anything would
         # survive its rewrite (a per-generation semi-join loop costs
-        # one Spark job per generation — at small window sizes that
-        # fixed job count, not data volume, was the measured cost)
-        from functools import reduce
-
+        # one Spark job per generation)
         affected: list[str] = []
         fully_blocked: set[str] = set()
         if candidates:
@@ -947,49 +937,26 @@ def unblock_minhash_ids(
                 for r in census
                 if r["_hit"] and r["_hit"] == r["_total"]
             }
-        # fresh sequential names past everything committed OR on disk
-        # (the fresh_gen rule, extended to a batch of allocations)
-        import re as _re
-
-        nums = [-1] + [int(g[1:]) for g in m["generations"]]
-        for parent in (f"{path}/data", f"{path}/sizes",
-                       f"{path}/tombstones"):
-            for name in index_fs.list_names(spark, parent):
-                mm = _re.search(r"g(\d{6})$", name)
-                if mm:
-                    nums.append(int(mm.group(1)))
-        counter = 1 + max(nums)
-
-        def alloc() -> str:
-            nonlocal counter
-            g = "g%06d" % counter
-            counter += 1
-            return g
-
+        alloc = index_fs.name_allocator(
+            spark,
+            [f"{path}/data", f"{path}/sizes", f"{path}/tombstones"],
+            m,
+        )
         mapping: dict[str, str | None] = {}
         for g in affected:
             # a generation whose every row is blocked REWRITES TO
             # NOTHING — drop it from the manifest instead of writing
-            # an empty (hence unreadable) parquet directory; decided
-            # by the census above, no extra job
+            # an empty (hence unreadable) parquet directory
             if g in fully_blocked:
                 mapping[g] = None
                 continue
             gnew = alloc()
             for rel in ("postings", "shingles"):
-                src_rel = _pinned_read(
+                _pinned_read(
                     spark, m, rel, f"{path}/data/{g}/{rel}"
-                )
-                kept = (
-                    src_rel.filter(
-                        index_fs.keep_ids_filter("id", blocked_ids)
-                    )
-                    if blocked_ids is not None
-                    else src_rel.join(blocked, "id", "left_anti")
-                )
-                kept.write.mode("overwrite").parquet(
-                    f"{path}/data/{gnew}/{rel}"
-                )
+                ).join(blocked, "id", "left_anti").write.mode(
+                    "overwrite"
+                ).parquet(f"{path}/data/{gnew}/{rel}")
             mapping[g] = gnew
         # sizes: subtract exactly the dropped postings' bucket counts
         # (never a full recount — the sizes relation stays the same
@@ -999,16 +966,14 @@ def unblock_minhash_ids(
         # version carries over unchanged.
         sizes_gen = m["sizes"]
         if affected:
-            dropped_src = _pinned_read(
-                spark, m, "postings",
-                *[f"{path}/data/{g}/postings" for g in affected],
-            )
             dropped = (
-                dropped_src.filter(F.col("id").isin(blocked_ids))
-                if blocked_ids is not None
-                else dropped_src.join(blocked, "id", "left_semi")
-            ).groupBy("band", "band_hash").agg(
-                F.count(F.lit(1)).cast("long").alias("c")
+                _pinned_read(
+                    spark, m, "postings",
+                    *[f"{path}/data/{g}/postings" for g in affected],
+                )
+                .join(blocked, "id", "left_semi")
+                .groupBy("band", "band_hash")
+                .agg(F.count(F.lit(1)).cast("long").alias("c"))
             )
             sizes_gen = alloc()
             (
@@ -1027,11 +992,7 @@ def unblock_minhash_ids(
                 .parquet(f"{path}/sizes/{sizes_gen}")
             )
         # tombstones minus the freed ids, as ONE fresh set
-        remaining = (
-            tombs.filter(index_fs.keep_ids_filter("id", blocked_ids))
-            if blocked_ids is not None
-            else tombs.join(blocked, "id", "left_anti")
-        ).persist()
+        remaining = tombs.join(blocked, "id", "left_anti").persist()
         try:
             new_tombs: list[str] = []
             n_rem = remaining.count()
@@ -1119,9 +1080,11 @@ def probe_minhash_index(
     # scan for candidate sets of a few rows. When the batch is small
     # enough that its banded signatures fit the isin-literal budget
     # (≤ SMALL_BATCH_CAP banded rows, i.e. ≤ cap/bands documents —
-    # gated by ONE bounded narrow collect of the raw batch ids), the
-    # batch's band hashes are collected and every corpus-scale scan
-    # is PREFILTERED by literal membership that pushes down to
+    # gated by ONE bounded narrow collect of the raw batch ids; an
+    # index banded wider than the cap never inlines, and a cap of 0
+    # disables the path), the batch's band hashes are collected and
+    # every corpus-scale scan is PREFILTERED by literal membership
+    # that pushes down to
     # parquet: sizes and postings by ``band_hash IN (...)``, and —
     # after a second bounded collect of the candidate pairs — the
     # shingle verify scan by ``corpus_id IN (...)``. The original
@@ -1129,8 +1092,13 @@ def probe_minhash_index(
     # prefilter only removes rows that provably cannot match; results
     # are identical, and larger batches keep the join formulation
     # (their probe work is corpus-shaped anyway).
-    fast_ids = max(1, index_fs.SMALL_BATCH_CAP // int(meta["bands"]))
-    id_rows = index_fs.collect_id_rows(batch, id_col, cap=fast_ids)
+    cap = index_fs.SMALL_BATCH_CAP
+    bands = int(meta["bands"])
+    id_rows = (
+        index_fs.collect_id_rows(batch, id_col, cap=cap // bands)
+        if bands <= cap
+        else None
+    )
     sizes = _read_sizes(spark, path, m).filter(
         F.col("bucket_size") <= F.lit(max_bucket_size)
     )
@@ -1143,6 +1111,7 @@ def probe_minhash_index(
         batch, id_col, text_col, meta["shingle_n"],
         min_partitions=1 if id_rows is not None else None,
     ).persist()
+    release = [bsh]
     try:
         wide = _signatures_wide(bsh, meta["num_perm"], meta["seed"])
         banded = _banded_signatures(
@@ -1189,9 +1158,15 @@ def probe_minhash_index(
             # bounded candidate collect → pushdown on the shingle
             # verify scan; an adversarial bucket blowup (> cap pairs)
             # keeps the join formulation on the already-prefiltered
-            # postings
-            crows = cand.limit(index_fs.SMALL_BATCH_CAP + 1).collect()
-            if len(crows) <= index_fs.SMALL_BATCH_CAP:
+            # postings — reading the candidates persisted by the
+            # collect instead of running the bucket join again. One
+            # cached partition: a batch of at most cap/bands documents
+            # has few candidates, and one partition keeps the bounded
+            # collect to one job
+            cand = cand.coalesce(1).persist()
+            release.append(cand)
+            crows = cand.limit(cap + 1).collect()
+            if len(crows) <= cap:
                 cids = sorted({r["corpus_id"] for r in crows})
                 corpus_sh = corpus_sh.filter(
                     F.col("corpus_id").isin(cids)
@@ -1199,7 +1174,7 @@ def probe_minhash_index(
                     else F.lit(False)
                 )
                 cand = F.broadcast(
-                    spark.createDataFrame(crows, cand.schema)
+                    index_fs.small_relation(spark, crows, cand.schema)
                 )
         b = bsh.select(F.col("id").alias("batch_id"), F.col("h").alias("h_b"))
         jac = F.size(F.array_intersect("h_b", "h_c")).cast("double") / F.size(
@@ -1212,7 +1187,8 @@ def probe_minhash_index(
             .filter(F.col("jaccard") >= F.lit(threshold))
             .select("batch_id", "corpus_id", "n_shared_bands", "jaccard")
         )
-        return materialize_and_release(out, bsh)
+        return materialize_and_release(out, *release)
     except BaseException:
-        bsh.unpersist()
+        for df in release:
+            df.unpersist()
         raise

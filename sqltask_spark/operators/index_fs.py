@@ -35,6 +35,7 @@ exactly as the table formats do.)
 from __future__ import annotations
 
 import json
+from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
@@ -214,17 +215,7 @@ def fresh_gen(
     existing index writes only new files (a committed reader keeps
     scanning the old generation untouched until the new manifest
     lands) instead of overwriting in place."""
-    import re
-
-    nums = [-1]
-    for g in (manifest or {}).get("generations", []):
-        nums.append(int(g[1:]))
-    for parent in parents:
-        for n in list_names(spark, parent):
-            mm = re.search(r"g(\d{6})$", n)
-            if mm:
-                nums.append(int(mm.group(1)))
-    return "g%06d" % (1 + max(nums))
+    return name_allocator(spark, parents, manifest or {})()
 
 
 def drop_manifests(
@@ -501,6 +492,323 @@ def stats_from_id_rows(rows: "list[tuple]") -> dict | None:
             "words": words,
         }
     return stats
+
+
+def small_relation(spark: SparkSession, rows: "list", schema):
+    """A driver-built relation of ``rows`` (tuples, or Rows, in
+    ``schema`` field order) under the explicit StructType ``schema``,
+    shipped to the JVM as one Arrow batch — no Python worker, unlike
+    ``createDataFrame(list_of_tuples)``, whose pickled rows cost a
+    worker round trip per small id set (~1 s measured per call)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    aschema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, aschema)],
+        schema=aschema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def prune_generations(
+    generations: "list[str]",
+    gen_stats: dict,
+    id_rows: "list[tuple]",
+) -> "list[str]":
+    """The generations that may hold any id of ``id_rows`` (collected
+    ``(id, p0, p1)`` rows) — every generation whose stats prove it
+    holds none of them is dropped, decided from the manifest alone."""
+    if not gen_stats:
+        return list(generations)
+    bounds = stats_from_id_rows(id_rows)
+    pos = [
+        (p0, p1) for _, p0, p1 in id_rows
+        if p0 is not None and p1 is not None
+    ] or None
+    return [
+        g for g in generations
+        if not generation_prunable(gen_stats.get(g), bounds, pos)
+    ]
+
+
+def unique_ids(id_rows: "list[tuple]") -> list:
+    """Sorted distinct non-null ids of collected ``(id, p0, p1)``
+    rows."""
+    return sorted({t[0] for t in id_rows if t[0] is not None})
+
+
+def tagged_membership(
+    parts: "list[tuple[str, object]]",
+    id_col: str,
+    ids: list,
+    totals: bool,
+) -> "dict[str, tuple[int, list]]":
+    """ONE action over ``parts`` — ``(tag, relation)`` pairs, one per
+    generation or tombstone set — answering for every id of ``ids``
+    where it is stored: ``{tag: (rows, hits)}`` with ``hits`` the
+    ``ids`` members the relation holds (one entry per row).
+    ``totals`` adds each relation's full row count (a scan of its id
+    column — needed only when a rewrite must know whether anything
+    survives it); without it the isin filter pushes down to the scan
+    and ``rows`` counts the hits only. Tags holding no row are absent.
+    """
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    if not parts:
+        return {}
+    hit = F.col("_id").isin(ids) if ids else F.lit(False)
+    tagged = reduce(
+        DataFrame.unionByName,
+        [
+            df.select(F.col(id_col).alias("_id")).withColumn(
+                "_t", F.lit(tag)
+            )
+            for tag, df in parts
+        ],
+    )
+    if not totals:
+        tagged = tagged.filter(hit)
+    rows = (
+        tagged.groupBy("_t")
+        .agg(
+            F.count(F.lit(1)).alias("_n"),
+            F.collect_list(F.when(hit, F.col("_id"))).alias("_hits"),
+        )
+        .collect()
+    )
+    return {r["_t"]: (int(r["_n"]), list(r["_hits"])) for r in rows}
+
+
+@dataclass
+class IndexMutation:
+    """One index mutation, planned on the driver: every id arrives as
+    a collected ``(id, p0, p1)`` row (the filter-bit positions drive
+    generation pruning). The per-index cores
+    (``dedup_index.apply_mutation``, ``ann_index.apply_mutation``)
+    apply it with one membership read and ONE manifest commit.
+
+    - ``gone``: ids to tombstone (deletes, update pre-images);
+    - ``free``: ids to free from the tombstones — their stored rows
+      are removed physically, so they can be re-admitted;
+    - ``rows``/``row_ids``: rows to append and their ids (an id
+      already stored, and not freed, is skipped — idempotency);
+    - ``batch_id``: ledger entry committed with the mutation (the
+      append arms skip a ledgered batch before planning it);
+    - ``synced``: ``{table_path: to_seq}`` markers committed with it.
+    """
+
+    id_type: object
+    gone: list = field(default_factory=list)
+    free: list = field(default_factory=list)
+    rows: object = None
+    row_ids: list = field(default_factory=list)
+    batch_id: str | None = None
+    synced: dict | None = None
+
+    def probe_rows(self) -> list:
+        return list(self.gone) + list(self.free) + list(self.row_ids)
+
+
+@dataclass
+class MutationCensus:
+    """Where a plan's ids live and what applying it decides — exactly
+    the outcome of applying delete, then unblock, then append one
+    after another:
+
+    - ``candidates``: the generations left after stats pruning;
+    - ``gens`` / ``tombs``: the membership read per generation and
+      per tombstone set, ``{name: (rows, hits)}``;
+    - ``tombstoned``: ``gone`` ids stored and not yet tombstoned;
+    - ``freed``: ``free`` ids tombstoned after that;
+    - ``removed``: freed ids with stored rows, dropped physically;
+    - ``stored``: the stored ids that stay;
+    - ``novel``: the ``row_ids`` rows whose id is not in ``stored``;
+    - ``affected``: the generations holding rows of removed ids.
+    """
+
+    candidates: list
+    gens: dict
+    tombs: dict
+    tombstoned: list
+    freed: list
+    removed: set
+    stored: set
+    novel: list
+    affected: list
+
+    def changes_nothing(self) -> bool:
+        return not (self.tombstoned or self.freed or self.novel)
+
+    def counts(self) -> dict:
+        return {
+            "tombstoned": len(self.tombstoned),
+            "appended": len(self.novel),
+            "unblocked": len(self.freed),
+            "rewritten_generations": self.affected,
+            "candidate_generations": (
+                len(self.candidates) if self.freed else 0
+            ),
+        }
+
+    def fully_removed(self, g: str) -> bool:
+        """Every row of generation ``g`` goes (needs the totals the
+        census reads whenever the plan frees ids)."""
+        rows, hits = self.gens[g]
+        return rows == sum(1 for i in hits if i in self.removed)
+
+
+def take_census(
+    plan: IndexMutation,
+    manifest: dict,
+    read_gen,
+    read_tombstones,
+    id_col: str,
+) -> MutationCensus:
+    """Prune the generations by the manifest's stats, then ONE
+    :func:`tagged_membership` read over the relations the plan can
+    need — ``read_gen(g)`` for candidate generations, and
+    ``read_tombstones(t)`` for the tombstone sets — and decide the
+    plan. Tombstone sets matter only for ids to free or stored ids to
+    tombstone; generations only for ids to tombstone, append or free
+    from live sets. A plan nothing can come of reads nothing."""
+    tomb_sets = list(manifest.get("tombstones", []))
+    probe_rows = plan.probe_rows()
+    candidates = prune_generations(
+        manifest["generations"], manifest.get("gen_stats", {}),
+        probe_rows,
+    )
+    ids = unique_ids(probe_rows)
+    parts = []
+    if candidates and (
+        plan.gone or plan.row_ids or (plan.free and tomb_sets)
+    ):
+        parts += [("d" + g, read_gen(g)) for g in candidates]
+    if tomb_sets and (plan.free or (plan.gone and candidates)):
+        parts += [("t" + t, read_tombstones(t)) for t in tomb_sets]
+    census = (
+        tagged_membership(parts, id_col, ids, totals=bool(plan.free))
+        if ids and parts
+        else {}
+    )
+    gens = {g: census.get("d" + g, (0, [])) for g in candidates}
+    tombs = {t: census.get("t" + t, (0, [])) for t in tomb_sets}
+    stored = {i for _, hits in gens.values() for i in hits}
+    tombed = {i for _, hits in tombs.values() for i in hits}
+    newly = [
+        i for i in unique_ids(plan.gone) if i in stored and i not in tombed
+    ]
+    blocked = tombed | set(newly)
+    freed = [i for i in unique_ids(plan.free) if i in blocked]
+    removed = stored & set(freed)
+    keep = stored - removed
+    return MutationCensus(
+        candidates=candidates,
+        gens=gens,
+        tombs=tombs,
+        tombstoned=newly,
+        freed=freed,
+        removed=removed,
+        stored=keep,
+        novel=[t for t in plan.row_ids if t[0] not in keep],
+        affected=sorted(
+            g for g in candidates
+            if any(i in removed for i in gens[g][1])
+        ),
+    )
+
+
+def name_allocator(
+    spark: SparkSession, parents: "list[str]", manifest: dict
+):
+    """Allocator of fresh sequential ``g%06d`` names past every
+    generation the manifest commits AND every name on disk under
+    ``parents`` — the :func:`fresh_gen` rule for a mutation that
+    writes several new directories in one commit."""
+    import itertools
+    import re
+
+    nums = [-1] + [int(g[1:]) for g in manifest.get("generations", [])]
+    for parent in parents:
+        for n in list_names(spark, parent):
+            mm = re.search(r"g(\d{6})$", n)
+            if mm:
+                nums.append(int(mm.group(1)))
+    counter = itertools.count(1 + max(nums))
+    return lambda: "g%06d" % next(counter)
+
+
+def write_tombstones(
+    spark: SparkSession,
+    path: str,
+    manifest: dict,
+    census: MutationCensus,
+    id_col: str,
+    id_type,
+    alloc,
+) -> "tuple[list[str], object]":
+    """The tombstone side of a mutation, as at most ONE written set:
+    the sets holding freed ids (the census carries their totals) are
+    rewritten without them, together with the newly tombstoned ids
+    that the same mutation does not free; sets holding no freed id
+    keep their names. Returns the committed set list and the written
+    relation's schema (``None`` when nothing was written)."""
+    from pyspark.sql.types import StructField, StructType
+
+    freed = set(census.freed)
+    new_ids = [i for i in census.tombstoned if i not in freed]
+    sets = list(manifest.get("tombstones", []))
+    touched = [
+        t for t in sets if any(i in freed for i in census.tombs[t][1])
+    ]
+    kept = [t for t in sets if t not in touched]
+    n = len(new_ids) + sum(
+        census.tombs[t][0]
+        - sum(1 for i in census.tombs[t][1] if i in freed)
+        for t in touched
+    )
+    if n == 0:
+        return kept, None
+    rel = small_relation(
+        spark, [(i,) for i in new_ids],
+        StructType([StructField(id_col, id_type)]),
+    )
+    if touched:
+        rel = (
+            pinned_read(
+                spark, manifest, "tombstones",
+                *[f"{path}/tombstones/{t}" for t in touched],
+            )
+            .filter(keep_ids_filter(id_col, sorted(freed)))
+            .unionByName(rel)
+        )
+    name = alloc()
+    shard_for_write(rel, n).write.mode("overwrite").parquet(
+        f"{path}/tombstones/{name}"
+    )
+    return kept + [name], rel.schema
+
+
+def pinned_read(spark: SparkSession, m: dict, rel: str, *paths: str):
+    """Parquet read with the manifest-recorded schema for ``rel``
+    when present — planning then costs ZERO Spark jobs, where schema
+    inference over a multi-file relation runs a distributed
+    footer-read job per ``spark.read.parquet`` call (measured: one
+    job per unpinned read site; at 100 TB the footer sweep is real
+    work, repeated on every probe/mutation). Falls back to inference
+    for manifests committed before schemas were recorded — mutations
+    backfill the entry, so old indexes heal on their next write."""
+    from pyspark.sql.types import StructType
+
+    s = m.get("schemas", {}).get(rel)
+    reader = spark.read
+    if s:
+        reader = reader.schema(StructType.fromJson(json.loads(s)))
+    return reader.parquet(*paths)
 
 
 def keep_ids_filter(id_col: str, drop_ids: "list"):

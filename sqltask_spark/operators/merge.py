@@ -44,6 +44,7 @@ the batch can actually touch, not the whole table.
 from __future__ import annotations
 
 import json
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,10 +55,10 @@ _DATA = "data"
 
 # Bounded-collect caps for the driver-side fast paths (module level
 # so tests can force the join formulations and pin fast ≡ join).
-# _KEYS_CAP bounds the per-key collect MERGE always does; _INLINE_CAP
-# additionally bounds the keys inlined into isin literals (decide
-# fast path); _CHANGES_CAP bounds each manifest-diff side of the
-# change-feed window fast path.
+# _KEYS_CAP bounds the per-key collects — the one MERGE always does,
+# and each manifest-diff side's digests in the change-feed window;
+# _INLINE_CAP bounds the keys inlined into isin literals (the MERGE
+# decide fast path, and the changed keys of a change-feed window).
 #
 # The isin caps sit at the MEASURED isin-vs-join crossover (r12
 # session 4): an N-literal isin costs analysis/codegen time that grows
@@ -69,7 +70,6 @@ _DATA = "data"
 # formulation, which is also the right shape at 100 TB.
 _KEYS_CAP = 65536
 _INLINE_CAP = 512
-_CHANGES_CAP = 512
 
 
 def _data_dir(path: str) -> str:
@@ -347,9 +347,14 @@ def read_parquet_table_keys(
         return spark.createDataFrame([], schema)
     stats = m.get("stats", {})
     lo_k, hi_k = min(keys), max(keys)
-    key_type = schema[stats_col].dataType.simpleString()
-    key_df = spark.createDataFrame(
-        [(k,) for k in keys], f"{stats_col} {key_type}"
+    from pyspark.sql.types import StructField, StructType
+
+    key_df = index_fs.small_relation(
+        spark,
+        [(k,) for k in keys],
+        StructType(
+            [StructField(stats_col, schema[stats_col].dataType, True)]
+        ),
     )
     probe_pos = index_fs.filter_probe_positions(key_df, stats_col)
 
@@ -891,6 +896,209 @@ def table_changes(
     )[0]
 
 
+@dataclass
+class ChangeWindow:
+    """The change feed of one window, classified on the driver (the
+    WINDOW fast path of :func:`table_changes_classified`): the changed
+    keys per type as ``(key, p0, p1)`` rows — the key's id-filter bit
+    positions (:func:`~sqltask_spark.operators.index_fs.
+    filter_pos_cols`) ride the same collect, so an index sync can
+    prune generations without another job — plus the window's two
+    file sets: ``pre`` (files the window removed) and ``post`` (files
+    it added)."""
+
+    key_col: str
+    key_type: object
+    val_cols: list
+    pre: DataFrame
+    post: DataFrame
+    inserted: list
+    deleted: list
+    updated: list
+
+    def _keyed(self, df: DataFrame, entries: list) -> DataFrame:
+        keys = [k for k, _, _ in entries]
+        return df.filter(
+            F.col(self.key_col).isin(keys) if keys else F.lit(False)
+        )
+
+    def rows(self, entries: list, cols: list) -> DataFrame:
+        """The post-image rows (``cols``) of the keys of ``entries``."""
+        return self._keyed(self.post, entries).select(*cols)
+
+    def changes(self) -> DataFrame:
+        """The feed relation: four FILTERED reads of the window files,
+        no exchange."""
+
+        def arm(df, entries, tag):
+            return self._keyed(df, entries).select(
+                self.key_col,
+                *self.val_cols,
+                F.lit(tag).alias("_change_type"),
+            )
+
+        return (
+            arm(self.post, self.inserted, "insert")
+            .unionByName(arm(self.pre, self.deleted, "delete"))
+            .unionByName(arm(self.pre, self.updated, "update_preimage"))
+            .unionByName(
+                arm(self.post, self.updated, "update_postimage")
+            )
+        )
+
+    def by_type(self) -> dict:
+        return {
+            "insert": len(self.inserted),
+            "delete": len(self.deleted),
+            "update_preimage": len(self.updated),
+            "update_postimage": len(self.updated),
+        }
+
+
+def _window_manifests(
+    spark: SparkSession, path: str, from_seq: int, to_seq: int | None
+) -> "tuple[dict, dict]":
+    """The committed manifests bounding a change window."""
+    m_from = index_fs.read_manifest_at(spark, path, from_seq)
+    if m_from is None:
+        raise ValueError(
+            f"version {from_seq} of {path} does not exist (vacuumed,"
+            f" torn, or never committed); available:"
+            f" {index_fs.list_manifest_seqs(spark, path)}"
+        )
+    if to_seq is None:
+        m_to = index_fs.read_manifest(spark, path)
+        if m_to is None:
+            raise ValueError(f"no committed table at {path}")
+    else:
+        m_to = index_fs.read_manifest_at(spark, path, to_seq)
+        if m_to is None:
+            raise ValueError(
+                f"version {to_seq} of {path} does not exist; available:"
+                f" {index_fs.list_manifest_seqs(spark, path)}"
+            )
+    return m_from, m_to
+
+
+def _window_reads(spark: SparkSession, path: str, m_from, m_to):
+    """(schema, pre, post): the table schema and the reads of the
+    files the window removed (pre-images) and added (post-images)."""
+    schema = _schema_of(m_to)
+    files_from = set(m_from.get("files", []))
+    files_to = set(m_to.get("files", []))
+
+    def read(rels):
+        if not rels:
+            return index_fs.small_relation(spark, [], schema)
+        return spark.read.schema(schema).parquet(*_abs_files(path, rels))
+
+    return (
+        schema,
+        read(sorted(files_from - files_to)),
+        read(sorted(files_to - files_from)),
+    )
+
+
+def _classify_window(
+    spark: SparkSession, path: str, key_cols: list, m_from, m_to
+) -> "ChangeWindow | None":
+    """The window fast path: each manifest-diff side's ``(key, h1,
+    h2)`` digests — two independently-seeded xxhash64 row digests
+    with per-column null indicators, 128 collision bits, the
+    :func:`~sqltask_spark.data.content_fingerprint` trust class — are
+    collected in one bounded collect (``_KEYS_CAP`` per side) and
+    classified on the driver. ``None`` when the window does not
+    qualify: a
+    composite key, a side past ``_KEYS_CAP``, a null or non-int/str
+    key, or more changed keys than ``_INLINE_CAP`` (they become the
+    arms' isin literals). The gate is the CHANGED keys, not the side
+    sizes: a MERGE rewrites whole files, so a handful of changes can
+    put thousands of carried survivor rows on each side."""
+    if len(key_cols) != 1:
+        return None
+    kc = key_cols[0]
+    schema, pre, post = _window_reads(spark, path, m_from, m_to)
+    val_cols = [f.name for f in schema.fields if f.name != kc]
+    p0, p1 = index_fs.filter_pos_cols(kc)
+
+    def digest(seed: int):
+        if not val_cols:
+            return F.lit(seed).cast("long")
+        parts = []
+        for c in val_cols:
+            parts.append(F.isnull(F.col(c)))
+            parts.append(F.col(c))
+        return F.xxhash64(F.lit(seed), *parts)
+
+    def side(df, tag):
+        return df.select(
+            F.lit(tag).alias("_s"),
+            F.col(kc).alias("_k"),
+            digest(11).alias("_h1"),
+            digest(23).alias("_h2"),
+            p0.alias("_p0"),
+            p1.alias("_p1"),
+        )
+
+    # both sides in ONE bounded collect
+    rows = (
+        side(pre, 0)
+        .unionByName(side(post, 1))
+        .limit(2 * _KEYS_CAP + 1)
+        .collect()
+    )
+    if len(rows) > 2 * _KEYS_CAP or not all(
+        isinstance(r["_k"], (int, str)) and not isinstance(r["_k"], bool)
+        for r in rows
+    ):
+        return None
+    pre_map = {r["_k"]: tuple(r[2:]) for r in rows if r["_s"] == 0}
+    post_map = {r["_k"]: tuple(r[2:]) for r in rows if r["_s"] == 1}
+    if max(len(pre_map), len(post_map)) > _KEYS_CAP:
+        return None
+
+    def entry(k, v):
+        return (k, v[2], v[3])
+
+    inserted = [entry(k, v) for k, v in sorted(post_map.items()) if k not in pre_map]
+    deleted = [entry(k, v) for k, v in sorted(pre_map.items()) if k not in post_map]
+    updated = [
+        entry(k, v)
+        for k, v in sorted(pre_map.items())
+        if k in post_map and v[:2] != post_map[k][:2]
+    ]
+    if len(inserted) + len(deleted) + len(updated) > _INLINE_CAP:
+        return None
+    return ChangeWindow(
+        key_col=kc,
+        key_type=schema[kc].dataType,
+        val_cols=val_cols,
+        pre=pre,
+        post=post,
+        inserted=inserted,
+        deleted=deleted,
+        updated=updated,
+    )
+
+
+def table_change_window(
+    spark: SparkSession,
+    path: str,
+    key_col: str,
+    from_seq: int,
+    to_seq: int | None = None,
+) -> "ChangeWindow | None":
+    """The change window ``(from_seq, to_seq]`` classified on the
+    driver, or ``None`` past the fast-path bounds (then read the feed
+    with :func:`table_changes_classified`). The incremental consumer's
+    entry point: the changed keys arrive as lists, so planning a
+    mutation from them costs no job beyond the two digest collects."""
+    return _classify_window(
+        spark, path, [key_col],
+        *_window_manifests(spark, path, from_seq, to_seq),
+    )
+
+
 def table_changes_classified(
     spark: SparkSession,
     path: str,
@@ -918,18 +1126,14 @@ def table_changes_classified(
     incremental consumers their counts job (``None`` otherwise; the
     caller counts).
 
-    WINDOW fast path (r12 session 3): when both manifest-diff sides
-    fit a bounded collect (single int/str key, no null keys), each
-    side's ``(key, h1, h2)`` rows — two independently-seeded
-    xxhash64 row digests with per-column null indicators, 128
-    collision bits, the :func:`~sqltask_spark.data.
-    content_fingerprint` trust class — are pulled driver-side and
-    classified there; the returned relation is then four FILTERED
-    reads of the window files (no exchange at all) instead of the
-    full-outer join + 4-way union, which cost 3-4 AQE stage jobs per
-    CDC epoch. Row-identical output (hash equality stands in for the
-    all-columns ``<=>`` conjunction; the null indicators break
-    xxhash64's null-skip symmetry so column shifts cannot collide).
+    WINDOW fast path (:func:`table_change_window`): the digests of
+    both manifest-diff sides are classified on the driver, and the
+    returned relation is four FILTERED reads of the window files (no
+    exchange at all) instead of the full-outer join + 4-way union,
+    which cost 3-4 AQE stage jobs per CDC epoch. Row-identical output
+    (hash equality stands in for the all-columns ``<=>`` conjunction;
+    the null indicators break xxhash64's null-skip symmetry so column
+    shifts cannot collide).
 
     Precondition: ``key_cols`` uniquely identify rows in every
     compared version. MERGE enforces this for every merged source,
@@ -938,129 +1142,43 @@ def table_changes_classified(
     duplicate keys outside that path would make the pre/post
     full-outer join explode rows and misclassify changes.
     """
-    m_from = index_fs.read_manifest_at(spark, path, from_seq)
-    if m_from is None:
-        raise ValueError(
-            f"version {from_seq} of {path} does not exist (vacuumed,"
-            f" torn, or never committed); available:"
-            f" {index_fs.list_manifest_seqs(spark, path)}"
-        )
-    if to_seq is None:
-        m_to = index_fs.read_manifest(spark, path)
-        if m_to is None:
-            raise ValueError(f"no committed table at {path}")
-    else:
-        m_to = index_fs.read_manifest_at(spark, path, to_seq)
-        if m_to is None:
-            raise ValueError(
-                f"version {to_seq} of {path} does not exist; available:"
-                f" {index_fs.list_manifest_seqs(spark, path)}"
-            )
-    schema = _schema_of(m_to)
-    cols = [f.name for f in schema.fields]
-    val_cols = [c for c in cols if c not in key_cols]
-    removed = sorted(set(m_from.get("files", [])) - set(m_to.get("files", [])))
-    added = sorted(set(m_to.get("files", [])) - set(m_from.get("files", [])))
+    m_from, m_to = _window_manifests(spark, path, from_seq, to_seq)
+    w = _classify_window(spark, path, key_cols, m_from, m_to)
+    if w is not None:
+        return w.changes(), w.by_type()
+    return _changes_joined(spark, path, key_cols, m_from, m_to), None
 
-    def _read(rels):
-        if not rels:
-            return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).parquet(*_abs_files(path, rels))
 
-    # ---- WINDOW fast path: bounded collect + driver classification
-    kc = key_cols[0]
+def table_changes_joined(
+    spark: SparkSession,
+    path: str,
+    key_cols: list[str],
+    from_seq: int,
+    to_seq: int | None = None,
+) -> DataFrame:
+    """The change feed of :func:`table_changes_classified` in its
+    join formulation only — for a consumer that already knows the
+    window fails the fast path (:func:`table_change_window` returned
+    ``None``) and must not pay its digest collects twice."""
+    return _changes_joined(
+        spark, path, key_cols,
+        *_window_manifests(spark, path, from_seq, to_seq),
+    )
 
-    def _digest(seed: int):
-        if not val_cols:
-            return F.lit(seed).cast("long")
-        parts = []
-        for c in val_cols:
-            parts.append(F.isnull(F.col(c)))
-            parts.append(F.col(c))
-        return F.xxhash64(F.lit(seed), *parts)
 
-    def _side(rels):
-        if not rels:
-            return []
-        rows = (
-            _read(rels)
-            .select(
-                F.col(kc).alias("_k"),
-                _digest(11).alias("_h1"),
-                _digest(23).alias("_h2"),
-            )
-            .limit(_CHANGES_CAP + 1)
-            .collect()
-        )
-        if len(rows) > _CHANGES_CAP:
-            return None
-        return rows
-
-    if len(key_cols) == 1:
-        pre_rows = _side(removed)
-        post_rows = _side(added) if pre_rows is not None else None
-        if pre_rows is not None and post_rows is not None:
-            ok = all(
-                r["_k"] is not None
-                and isinstance(r["_k"], (int, str))
-                and not isinstance(r["_k"], bool)
-                for rows in (pre_rows, post_rows)
-                for r in rows
-            )
-            if ok:
-                pre_map = {
-                    r["_k"]: (r["_h1"], r["_h2"]) for r in pre_rows
-                }
-                post_map = {
-                    r["_k"]: (r["_h1"], r["_h2"]) for r in post_rows
-                }
-                ins_keys = sorted(
-                    k for k in post_map if k not in pre_map
-                )
-                del_keys = sorted(
-                    k for k in pre_map if k not in post_map
-                )
-                upd_keys = sorted(
-                    k
-                    for k in pre_map
-                    if k in post_map and pre_map[k] != post_map[k]
-                )
-                pre_df = _read(removed)
-                post_df = _read(added)
-
-                def _arm(df, keys, tag):
-                    return df.filter(
-                        F.col(kc).isin(keys) if keys else F.lit(False)
-                    ).select(
-                        *key_cols,
-                        *val_cols,
-                        F.lit(tag).alias("_change_type"),
-                    )
-
-                out = (
-                    _arm(post_df, ins_keys, "insert")
-                    .unionByName(_arm(pre_df, del_keys, "delete"))
-                    .unionByName(
-                        _arm(pre_df, upd_keys, "update_preimage")
-                    )
-                    .unionByName(
-                        _arm(post_df, upd_keys, "update_postimage")
-                    )
-                )
-                by_type = {
-                    "insert": len(ins_keys),
-                    "delete": len(del_keys),
-                    "update_preimage": len(upd_keys),
-                    "update_postimage": len(upd_keys),
-                }
-                return out, by_type
-
-    pre = _read(removed).select(
+def _changes_joined(
+    spark: SparkSession, path: str, key_cols: list, m_from, m_to
+) -> DataFrame:
+    """Full-outer join of the window's pre and post files + 4-way
+    union — the formulation for windows past the fast path."""
+    schema, pre_df, post_df = _window_reads(spark, path, m_from, m_to)
+    val_cols = [f.name for f in schema.fields if f.name not in key_cols]
+    pre = pre_df.select(
         *key_cols,
         *[F.col(c).alias(f"__pre_{c}") for c in val_cols],
         F.lit(1).alias("__in_pre"),
     )
-    post = _read(added).select(
+    post = post_df.select(
         *key_cols,
         *[F.col(c).alias(f"__post_{c}") for c in val_cols],
         F.lit(1).alias("__in_post"),
@@ -1100,11 +1218,8 @@ def table_changes_classified(
         *[F.col(f"__post_{c}").alias(c) for c in val_cols],
         F.lit("update_postimage").alias("_change_type"),
     )
-    return (
-        ins.unionByName(dele).unionByName(upd_pre).unionByName(
-            upd_post
-        ),
-        None,
+    return ins.unionByName(dele).unionByName(upd_pre).unionByName(
+        upd_post
     )
 
 

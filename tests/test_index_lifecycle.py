@@ -1155,8 +1155,12 @@ def test_sync_marker_crash_rerun_converges(spark, tables, tmp_path,
     a correctness dependency: a crash AFTER the window's mutations
     but BEFORE the marker commit leaves the next marker-resumed call
     unable to skip — it re-applies the window — and the state
-    CONVERGES (probe unchanged), after which the marker lands."""
+    CONVERGES (probe unchanged), after which the marker lands. Only
+    a window past the change feed's fast path commits its marker
+    separately (a fast-path window commits mutations and marker in
+    one manifest), so the window is forced past it."""
     from sqltask_spark.operators import index_sync
+    from sqltask_spark.operators import merge as mg
     from sqltask_spark.operators.index_sync import (
         sync_minhash_index_with_table,
     )
@@ -1182,6 +1186,7 @@ def test_sync_marker_crash_rerun_converges(spark, tables, tmp_path,
         ["doc_id"], delete_col="is_del",
     )
 
+    monkeypatch.setattr(mg, "_INLINE_CAP", 0)
     real = index_sync._commit_synced_marker
 
     def crash(*a, **kw):
@@ -1671,3 +1676,200 @@ def test_ivf_append_ledger_trim_antijoin_backstop(
     assert append_to_ivf_index(
         idx, parts[1], "vec_id", "embedding", batch_id="a1"
     ) == 0
+
+
+def _orphan_dirs(spark, path, parents):
+    """Directories under ``parents`` that no parseable manifest
+    names — the debris a crashed writer leaves."""
+    live = set()
+    for m in index_fs.read_all_manifests(spark, path):
+        for key in ("generations", "sizes", "tombstones", "quantizer"):
+            v = m.get(key, [])
+            live |= {v} if isinstance(v, str) else set(v)
+    return sorted(
+        f"{p}/{n}"
+        for p in parents
+        for n in index_fs.list_names(spark, f"{path}/{p}")
+        if n.removeprefix("gen=") not in live
+    )
+
+
+def _crash_commit(monkeypatch):
+    real = index_fs.commit_manifest
+
+    def crash(*a, **kw):
+        raise RuntimeError("injected crash at the sync commit")
+
+    monkeypatch.setattr(index_fs, "commit_manifest", crash)
+    return lambda: monkeypatch.setattr(index_fs, "commit_manifest", real)
+
+
+def test_sync_commit_crash_leaves_presync_state_minhash(
+    spark, tables, tmp_path, monkeypatch
+):
+    """A fast-path sync is ONE commit: a crash inside it — after every
+    rewritten generation, tombstone set, appended generation and
+    sizes version is on disk — leaves the committed manifest, the
+    synced marker and the probe results exactly at their pre-sync
+    values. A marker-resumed re-run sweeps the debris and converges
+    to a fresh build over the table."""
+    from sqltask_spark.operators.dedup_index import committed_manifest
+    from sqltask_spark.operators.index_sync import (
+        sync_minhash_index_with_table,
+    )
+    from sqltask_spark.operators.merge import (
+        create_parquet_table,
+        merge_into_parquet,
+        read_parquet_table,
+    )
+
+    docs = tables["documents"].select("doc_id", "text").limit(40)
+    tbl = str(tmp_path / "sc_tbl")
+    idx = str(tmp_path / "sc_idx")
+    create_parquet_table(docs, tbl)
+    build_minhash_index(docs, idx)
+    ids = [r["doc_id"] for r in docs.orderBy("doc_id").limit(3).collect()]
+    schema = "doc_id long, text string, is_del boolean"
+    # window 1 (committed): delete ids[0] — its tombstone stays live
+    v0 = index_fs.read_manifest(spark, tbl)["_seq"]
+    merge_into_parquet(
+        spark, tbl, spark.createDataFrame([(ids[0], None, True)], schema),
+        ["doc_id"], delete_col="is_del",
+    )
+    sync_minhash_index_with_table(
+        spark, tbl, idx, "doc_id", "text", from_seq=v0
+    )
+    # window 2 (crashes): re-insert ids[0], update ids[1], delete
+    # ids[2], insert a novel doc
+    merge_into_parquet(
+        spark, tbl,
+        spark.createDataFrame(
+            [
+                (ids[0], NOVEL + " back", False),
+                (ids[1], NOVEL + " rewritten", False),
+                (ids[2], None, True),
+                (990_001, NOVEL, False),
+            ],
+            schema,
+        ),
+        ["doc_id"], delete_col="is_del",
+    )
+    probe = read_parquet_table(spark, tbl).unionByName(
+        spark.createDataFrame(
+            [(990_002, NOVEL + " probe")], "doc_id long, text string"
+        )
+    )
+    m_pre = committed_manifest(spark, idx)
+    pre = _mh_canon(spark, idx, probe)
+    parents = ("data", "sizes", "tombstones")
+    assert _orphan_dirs(spark, idx, parents) == []
+
+    restore = _crash_commit(monkeypatch)
+    with pytest.raises(RuntimeError, match="injected"):
+        sync_minhash_index_with_table(spark, tbl, idx, "doc_id", "text")
+    restore()
+
+    assert committed_manifest(spark, idx) == m_pre
+    assert _mh_canon(spark, idx, probe) == pre
+    assert _orphan_dirs(spark, idx, parents)  # debris on disk
+    r = sync_minhash_index_with_table(spark, tbl, idx, "doc_id", "text")
+    assert (r["tombstoned"], r["appended"], r["unblocked"]) == (2, 3, 2)
+    assert _orphan_dirs(spark, idx, parents) == []
+    m = committed_manifest(spark, idx)
+    assert m["_seq"] == m_pre["_seq"] + 1
+    assert m["synced"][tbl] == r["to_seq"]
+    fresh = str(tmp_path / "sc_fresh")
+    build_minhash_index(read_parquet_table(spark, tbl), fresh)
+    assert _mh_canon(spark, idx, probe) == _mh_canon(spark, fresh, probe)
+
+
+def test_sync_commit_crash_leaves_presync_state_ivf(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """IVF symmetry of the single-commit sync crash: the committed
+    manifest, marker and probes stay at the pre-sync state; the
+    re-run sweeps the debris and lands the window — twin probes find
+    the synced vectors at cosine 1.0 and never the deleted one."""
+    from sqltask_spark.operators.ann_index import committed_manifest
+    from sqltask_spark.operators.index_sync import (
+        sync_ivf_index_with_table,
+    )
+    from sqltask_spark.operators.merge import (
+        create_parquet_table,
+        merge_into_parquet,
+        read_parquet_table,
+    )
+
+    emb = (
+        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        .select("vec_id", "embedding")
+        .limit(100)
+    )
+    tbl = str(tmp_path / "sci_tbl")
+    idx = str(tmp_path / "sci_idx")
+    create_parquet_table(emb, tbl)
+    build_ivf_index(emb, idx, "vec_id", "embedding", n_cells=16)
+    v0 = index_fs.read_manifest(spark, tbl)["_seq"]
+    two = emb.orderBy("vec_id").limit(2).collect()
+    dim = len(two[0]["embedding"])
+    # unique directions, as in test_sync_ivf_index_with_table_cdc
+    upd_vec = [float(x) * -1.0 for x in two[1]["embedding"]]
+    new_vec = [0.5 + 0.01 * i for i in range(dim)]
+    merge_into_parquet(
+        spark, tbl,
+        spark.createDataFrame(
+            [
+                (two[0]["vec_id"], None, True),
+                (two[1]["vec_id"], upd_vec, False),
+                (990001, new_vec, False),
+            ],
+            "vec_id long, embedding array<float>, is_del boolean",
+        ),
+        ["vec_id"], delete_col="is_del",
+    )
+    q = spark.createDataFrame(
+        [(555001, new_vec), (555002, upd_vec)],
+        "vec_id long, embedding array<float>",
+    )
+    current = read_parquet_table(spark, tbl)
+
+    def twins():
+        return {
+            (r["query_id"], r["neighbor_id"]): r["score"]
+            for r in probe_ivf_index(
+                spark, idx, q, "vec_id", "embedding", k=5, n_probe=16
+            ).collect()
+        }
+
+    def deleted_hits():
+        return probe_ivf_index(
+            spark, idx, current, "vec_id", "embedding", k=5, n_probe=16
+        ).filter(F.col("neighbor_id") == two[0]["vec_id"]).count()
+
+    m_pre = committed_manifest(spark, idx)
+    pre = twins()
+    assert pre.get((555001, 990001)) is None
+    parents = ("vectors", "quantizer", "tombstones")
+
+    restore = _crash_commit(monkeypatch)
+    with pytest.raises(RuntimeError, match="injected"):
+        sync_ivf_index_with_table(
+            spark, tbl, idx, "vec_id", "embedding", from_seq=v0
+        )
+    restore()
+
+    assert committed_manifest(spark, idx) == m_pre
+    assert "synced" not in m_pre
+    assert twins() == pre
+    assert deleted_hits() > 0  # the delete did not land either
+    assert _orphan_dirs(spark, idx, parents)
+    r = sync_ivf_index_with_table(
+        spark, tbl, idx, "vec_id", "embedding", from_seq=v0
+    )
+    assert (r["tombstoned"], r["appended"], r["unblocked"]) == (2, 2, 1)
+    assert _orphan_dirs(spark, idx, parents) == []
+    assert committed_manifest(spark, idx)["synced"][tbl] == r["to_seq"]
+    got = twins()
+    assert got[(555001, 990001)] == 1.0
+    assert got[(555002, two[1]["vec_id"])] == 1.0
+    assert deleted_hits() == 0

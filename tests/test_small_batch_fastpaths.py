@@ -91,7 +91,7 @@ def test_table_changes_fast_matches_join(spark, tmpdir, monkeypatch):
     )
     assert by_type is not None  # the window fast path fired
     rows_fast = _rows(df_fast)
-    monkeypatch.setattr(mg, "_CHANGES_CAP", 0)
+    monkeypatch.setattr(mg, "_INLINE_CAP", 0)
     df_join, by_join = mg.table_changes_classified(
         spark, path, ["k"], v0
     )
@@ -270,3 +270,250 @@ def test_ivf_mutations_fast_match_join(spark, tmpdir, monkeypatch):
     assert outcomes[0][0] == 1
     assert outcomes[0][1] == 1
     assert outcomes[0][2] == 1
+
+
+def test_table_changes_fast_path_survives_file_rewrites(
+    spark, tmpdir, monkeypatch
+):
+    # a MERGE rewrites whole files: three changed keys in a 1200-row,
+    # two-file table put ~600 carried rows on each manifest-diff side.
+    # The window gate is the CHANGED keys, so the fast path still
+    # fires — and matches the join arm row for row
+    path = f"{tmpdir}/wide"
+    seed = spark.createDataFrame(
+        [(i, f"v{i}", i % 3) for i in range(1200)],
+        "k long, v string, grp long",
+    )
+    mg.create_parquet_table(
+        seed.repartitionByRange(2, "k"), path, stats_col="k"
+    )
+    v0 = index_fs.read_manifest(spark, path)["_seq"]
+    src = spark.createDataFrame(
+        [(5, "new", 5, False), (900, None, 0, True), (5000, "in", 1, False)],
+        "k long, v string, grp long, is_del boolean",
+    )
+    res = mg.merge_into_parquet(spark, path, src, ["k"], delete_col="is_del")
+    assert res["rewritten_files"] == 2
+    df_fast, by_type = mg.table_changes_classified(spark, path, ["k"], v0)
+    assert by_type == {
+        "insert": 1, "delete": 1, "update_preimage": 1,
+        "update_postimage": 1,
+    }
+    w = mg.table_change_window(spark, path, "k", v0)
+    assert [k for k, _, _ in w.inserted] == [5000]
+    assert [k for k, _, _ in w.deleted] == [900]
+    assert [k for k, _, _ in w.updated] == [5]
+    monkeypatch.setattr(mg, "_INLINE_CAP", 0)
+    df_join, by_join = mg.table_changes_classified(spark, path, ["k"], v0)
+    assert by_join is None and mg.table_change_window(
+        spark, path, "k", v0
+    ) is None
+    assert _rows(df_fast) == _rows(df_join)
+
+
+def test_small_relation_round_trips_ids(spark):
+    from pyspark.sql.types import (
+        IntegerType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    for dtype, ids in (
+        (LongType(), [2**40, -3, None, 0]),
+        (IntegerType(), [7, None, -2**31]),
+        (StringType(), ["a", None, "é-ü", ""]),
+    ):
+        schema = StructType([StructField("id", dtype, True)])
+        df = index_fs.small_relation(spark, [(i,) for i in ids], schema)
+        assert df.schema == schema
+        assert [r["id"] for r in df.collect()] == ids
+    two = StructType(
+        [StructField("a", LongType()), StructField("b", StringType())]
+    )
+    df = index_fs.small_relation(spark, [(1, "x"), (None, None)], two)
+    assert df.schema == two
+    assert [tuple(r) for r in df.collect()] == [(1, "x"), (None, None)]
+    empty = index_fs.small_relation(spark, [], two)
+    assert empty.schema == two and empty.collect() == []
+
+
+def _mh_docs(spark, n=30):
+    return spark.createDataFrame(
+        [(i, f"alpha beta gamma delta {i} epsilon zeta") for i in range(n)],
+        "doc_id long, text string",
+    )
+
+
+def test_probe_fast_path_gated_on_bands(spark, tmpdir, monkeypatch):
+    # the probe inlines the batch's band hashes only when one
+    # document's bands fit the literal budget: a cap of 0 disables
+    # the path and a cap below the band count (16) never inlines —
+    # the ids are never even collected, and the result is the join
+    # formulation's
+    from sqltask_spark.operators import dedup_index as di
+
+    p = f"{tmpdir}/mh_gate"
+    docs = _mh_docs(spark)
+    di.build_minhash_index(docs, p)
+    q = docs.limit(2).select(
+        (F.col("doc_id") + 1000).alias("doc_id"), "text"
+    )
+    want = _rows(di.probe_minhash_index(spark, p, q, threshold=0.4))
+    assert want
+    calls = []
+    real = index_fs.collect_id_rows
+
+    def spy(df, id_col, cap=index_fs.SMALL_BATCH_CAP):
+        calls.append(cap)
+        return real(df, id_col, cap)
+
+    monkeypatch.setattr(index_fs, "collect_id_rows", spy)
+    for cap in (0, 8):
+        monkeypatch.setattr(index_fs, "SMALL_BATCH_CAP", cap)
+        assert _rows(
+            di.probe_minhash_index(spark, p, q, threshold=0.4)
+        ) == want
+    assert calls == []
+
+
+def test_probe_bucket_blowup_runs_candidates_once(
+    spark, tmpdir, monkeypatch
+):
+    # a tiny batch whose candidate pairs exceed the cap (40 identical
+    # documents share every bucket) takes the join formulation on the
+    # candidates the bounded collect already computed: they are
+    # persisted before it, so the bucket join is not run a second
+    # time. Counted through a job group: 15 jobs on the test session
+    # (19 when the candidates ran twice)
+    from sqltask_spark.operators import dedup_index as di
+
+    text = "alpha beta gamma delta epsilon zeta eta theta"
+    p = f"{tmpdir}/mh_blowup"
+    di.build_minhash_index(
+        spark.createDataFrame(
+            [(i, text) for i in range(40)], "doc_id long, text string"
+        ),
+        p,
+    )
+    q = spark.createDataFrame([(900, text)], "doc_id long, text string")
+    monkeypatch.setattr(index_fs, "SMALL_BATCH_CAP", 16)
+    sc = spark.sparkContext
+    jobs = []
+    for rep in range(2):  # the first probe pays one-time planning
+        group = f"probe_blowup_{rep}"
+        sc.setJobGroup(group, group)
+        try:
+            out = di.probe_minhash_index(spark, p, q, threshold=0.4)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert out.count() == 40
+        out.unpersist()
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs[1] <= 15, jobs
+
+
+def _sync_state(spark, di, ai, mh, ivf, probe):
+    mt = di.read_tombstones(spark, mh)
+    it = ai.read_tombstones(spark, ivf)
+    knn = ai.probe_ivf_index(
+        spark, ivf, probe.select("doc_id", "embedding"), "doc_id",
+        k=3, n_probe=4,
+    )
+    return (
+        _rows(di.probe_minhash_index(
+            spark, mh, probe.select("doc_id", "text"), threshold=0.4
+        )),
+        _rows(knn, ["query_id", "rank", "neighbor_id", "score"]),
+        sorted(r["id"] for r in (mt.collect() if mt is not None else [])),
+        sorted(
+            r["neighbor_id"]
+            for r in (it.collect() if it is not None else [])
+        ),
+    )
+
+
+def test_sync_single_commit_matches_composed(spark, tmpdir, monkeypatch):
+    # the fast-path sync (one mutation, one commit) against the
+    # composition of the public mutations it replaces (forced by a
+    # zero inline cap): same counts, same tombstones, same probes —
+    # across deletes, updates, inserts, a key taken down straight on
+    # the indexes and then updated, and a deleted key re-inserted by
+    # a later window
+    from sqltask_spark.operators import ann_index as ai
+    from sqltask_spark.operators import dedup_index as di
+    from sqltask_spark.operators.index_sync import (
+        sync_ivf_index_with_table,
+        sync_minhash_index_with_table,
+    )
+
+    schema = "doc_id long, text string, embedding array<float>, is_del boolean"
+
+    def row(i, tag="", is_del=False):
+        return (
+            i,
+            f"alpha beta gamma {tag} delta {i} epsilon zeta",
+            [float((i * 7 + j * 3) % 11) + (0.5 if tag else 0.0)
+             for j in range(8)],
+            is_del,
+        )
+
+    windows = [
+        [row(3, is_del=True), row(5, "upd"), row(7, "back"),
+         row(100, "new")],
+        [row(3, "again"), row(5, "twice"), row(11, is_del=True)],
+    ]
+    probe = spark.createDataFrame(
+        [row(i + 10**6, t)[:3] for i, t in
+         ((3, "again"), (5, "twice"), (7, "back"), (100, "new"), (12, ""))],
+        "doc_id long, text string, embedding array<float>",
+    )
+    outcomes = []
+    for composed in (False, True):
+        root = f"{tmpdir}/arm{int(composed)}"
+        tbl, mh, ivf = f"{root}/t", f"{root}/mh", f"{root}/ivf"
+        docs = spark.createDataFrame(
+            [row(i)[:3] for i in range(40)],
+            "doc_id long, text string, embedding array<float>",
+        )
+        mg.create_parquet_table(docs.repartition(2), tbl, stats_col="doc_id")
+        di.build_minhash_index(docs.select("doc_id", "text"), mh)
+        ai.build_ivf_index(docs, ivf, "doc_id", "embedding", n_cells=4)
+        take = spark.createDataFrame([(7,)], "doc_id long")
+        assert di.delete_from_minhash_index(mh, take) == 1
+        assert ai.delete_from_ivf_index(ivf, take, "doc_id") == 1
+        seq = index_fs.read_manifest(spark, tbl)["_seq"]
+        got = []
+        for w in windows:
+            mg.merge_into_parquet(
+                spark, tbl, spark.createDataFrame(w, schema),
+                ["doc_id"], delete_col="is_del",
+            )
+            commits = [
+                index_fs.read_manifest(spark, p)["_seq"] for p in (mh, ivf)
+            ]
+            with monkeypatch.context() as mp:
+                if composed:
+                    mp.setattr(mg, "_INLINE_CAP", 0)
+                for fn, p, col in (
+                    (sync_minhash_index_with_table, mh, "text"),
+                    (sync_ivf_index_with_table, ivf, "embedding"),
+                ):
+                    r = fn(spark, tbl, p, "doc_id", col, from_seq=seq)
+                    got.append(
+                        {**r, "rewritten_generations":
+                         len(r["rewritten_generations"])}
+                    )
+            if not composed:  # ONE commit per sync
+                assert [
+                    index_fs.read_manifest(spark, p)["_seq"]
+                    for p in (mh, ivf)
+                ] == [c + 1 for c in commits]
+            seq = index_fs.read_manifest(spark, tbl)["_seq"]
+        outcomes.append((got, _sync_state(spark, di, ai, mh, ivf, probe)))
+    assert outcomes[0] == outcomes[1]
+    first = outcomes[0][0][0]
+    assert (first["tombstoned"], first["appended"], first["unblocked"]) == (
+        2, 3, 2
+    )
