@@ -240,7 +240,13 @@ def learn_bpe_merges_distributed(
     # truncates the growing withColumn lineage so plan depth stays
     # bounded for large ``n_merges``. Values are bit-identical: same
     # expressions, same data, only the materialization schedule moved.
+    # A checkpoint is never a ``pending`` predecessor: every lazily
+    # persisted successor's lineage is truncated AT the latest
+    # checkpoint (``anchor``), so a lost successor block recomputes
+    # from it — it is released only once the next eager checkpoint
+    # has replaced it.
     pending = None  # predecessor cache awaiting release
+    anchor = vocab  # latest checkpoint, the successors' lineage root
     for rank in range(1, n_merges + 1):
         pairs = (
             vocab.select(
@@ -290,12 +296,15 @@ def learn_bpe_merges_distributed(
             # eager: pays one job, resets plan depth
             vocab = rewritten.localCheckpoint()
             old.unpersist()
+            anchor.unpersist()
+            anchor = vocab
         else:
             vocab = rewritten.persist()
-            pending = old
+            pending = None if old is anchor else old
     if pending is not None:
         pending.unpersist()
     vocab.unpersist()
+    anchor.unpersist()
     return spark.createDataFrame(merges, _MERGE_SCHEMA)
 
 

@@ -21,8 +21,10 @@ def drop_hot_buckets(
     df: DataFrame,
     keys: list[str],
     max_bucket_size: int | None,
+    min_size: int = 1,
 ) -> DataFrame:
-    """Drop all rows belonging to buckets larger than the cap.
+    """Drop all rows belonging to buckets larger than the cap (or
+    smaller than ``min_size``).
 
     ``df`` is an exploded (member, bucket-key...) relation; buckets
     are identified by ``keys``. Implemented as a single-pass count
@@ -38,19 +40,27 @@ def drop_hot_buckets(
     no vector/text payload) so the shuffled bytes stay minimal.
 
     ``max_bucket_size=None`` disables the cap (exact mode).
+    ``min_size=2`` also drops singleton buckets in the same window —
+    the candidate-pair callers, whose singletons pair with nothing
+    and are most of an LSH band relation, keep only ``2 ≤ n ≤ cap``
+    before their ``collect_list``.
 
     To see what was dropped, run
     ``hot_bucket_report(df, keys, cap)`` — kept separate so the main
     path never pays an extra action.
     """
-    if max_bucket_size is None:
+    if max_bucket_size is None and min_size <= 1:
         return df
     from pyspark.sql import Window
 
+    n = F.col("__bucket_n")
+    keep = n >= min_size
+    if max_bucket_size is not None:
+        keep = keep & (n <= max_bucket_size)
     w = Window.partitionBy(*keys)
     return (
         df.withColumn("__bucket_n", F.count(F.lit(1)).over(w))
-        .filter(F.col("__bucket_n") <= max_bucket_size)
+        .filter(keep)
         .drop("__bucket_n")
     )
 

@@ -36,22 +36,9 @@ from sqltask_spark.operators.text import normalize_text, tokenize
 MERSENNE_P = (1 << 61) - 1
 
 
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """Word n-gram shingles of normalized text → array<string>.
-
-    Short documents (< n tokens) fall back to one whole-text shingle
-    so every doc has a non-empty shingle set.
-
-    Built as a ``zip_with`` fold over ``n`` shifted slices of the
-    token array rather than a ``transform`` over gram indices: lambda
-    bodies of higher-order functions are re-evaluated per element and
-    are not codegen'd, so referencing ``tokenize(col)`` inside the
-    lambda re-runs the regexp+split once PER SHINGLE — O(tokens²)
-    work per document. The slice formulation evaluates the tokenizer
-    a constant ``n`` times per row and zips materialized arrays,
-    which measured ~2× faster on the shingle-heavy dedup queries.
-    """
-    toks = tokenize(col)
+def _shingles_of(toks: Column, norm: Column, n: int) -> Column:
+    """Word n-gram shingles of the token array ``toks`` of the
+    normalized text ``norm`` (see :func:`word_shingles`)."""
     k = F.size(toks)
     m = F.greatest(k - (n - 1), F.lit(1))  # gram count when k >= n
     grams = F.slice(toks, 1, m)
@@ -61,16 +48,65 @@ def word_shingles(col: Column, n: int = 3) -> Column:
             F.slice(toks, 1 + j, m),
             lambda a, b: F.concat_ws(" ", a, b),
         )
-    return F.when(k >= n, grams).otherwise(F.array(normalize_text(col)))
+    return F.when(k >= n, grams).otherwise(F.array(norm))
 
 
-def shingle_hashes(col: Column, shingle_n: int = 3) -> Column:
-    """Distinct 61-bit shingle hashes (xxhash64 reduced mod p)."""
-    return F.array_distinct(
-        F.transform(
-            word_shingles(col, shingle_n),
-            lambda s: F.abs(F.xxhash64(s)) % F.lit(MERSENNE_P),
-        )
+def word_shingles(col: Column, n: int = 3) -> Column:
+    """Word n-gram shingles of normalized text → array<string>.
+
+    Short documents (< n tokens) fall back to one whole-text shingle
+    so every doc has a non-empty shingle set.
+
+    Built as a ``zip_with`` fold over ``n`` shifted slices of the
+    token array rather than a ``transform`` over gram indices, whose
+    lambda would re-run the tokenizer once PER SHINGLE. The Column
+    form still inlines the tokenizer into every slice and slice bound
+    and into the short-text fallback — ``2n + 2`` copies in the plan,
+    8 for trigrams — and the ``zip_with`` arguments are evaluated by
+    an interpreted higher-order function, outside codegen's
+    subexpression elimination, so those copies are not shared.
+    DataFrame callers use :func:`shingle_sets`, which tokenizes each
+    document once; this form stays for Column-only call sites.
+    """
+    return _shingles_of(tokenize(col), normalize_text(col), n)
+
+
+def shingle_sets(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_n: int = 3,
+    min_partitions: int | None = None,
+    carry: tuple[Column, ...] = (),
+) -> DataFrame:
+    """(id, *carry, shingles: array<string>) — :func:`word_shingles`
+    of every document with the text normalized and split ONCE.
+
+    The normalized text and its token array are projected as columns
+    first and the shingles built from those references; the optimizer
+    keeps the projections apart because collapsing them would
+    duplicate the non-trivial producers, so the plan holds a single
+    ``regexp_replace``. The input is widened via
+    :func:`~sqltask_spark.data.ensure_min_partitions` (shingling is
+    CPU-bound per-row work); ``min_partitions`` sizes that guard
+    for callers that know their batch is small. ``carry`` are extra
+    (aliased) columns of ``df`` projected alongside the id.
+    """
+    from sqltask_spark.data import ensure_min_partitions
+
+    norm = ensure_min_partitions(df, min_partitions).select(
+        F.col(id_col).alias("id"),
+        *carry,
+        normalize_text(F.col(text_col)).alias("__norm"),
+    )
+    kept = norm.columns[:-1]
+    return norm.select(
+        *kept, "__norm", F.split("__norm", " ").alias("__toks")
+    ).select(
+        *kept,
+        _shingles_of(F.col("__toks"), F.col("__norm"), shingle_n).alias(
+            "shingles"
+        ),
     )
 
 
@@ -86,19 +122,23 @@ def shingled_docs(
     The shared upstream of MinHash signatures and Jaccard
     verification: computing it once (and persisting when both
     consumers run in one job) halves the per-doc text work, which
-    dominates the dedup pipeline. Input is widened via
-    :func:`ensure_min_partitions` because shingling is pure CPU-bound
-    per-row work. ``min_partitions`` lets a caller who KNOWS the
-    batch is small (the index small-batch fast paths) size the guard
-    to the batch instead of the session — repartitioning a 1-row CDC
-    window into 32 partitions is an exchange plus 32-task stages of
-    pure overhead.
+    dominates the dedup pipeline. Built on :func:`shingle_sets`, so
+    each document is tokenized once. ``min_partitions`` lets a caller
+    who KNOWS the batch is small (the index small-batch fast paths)
+    size the partition guard to the batch instead of the session —
+    repartitioning a 1-row CDC window into 32 partitions is an
+    exchange plus 32-task stages of pure overhead.
     """
-    from sqltask_spark.data import ensure_min_partitions
-
-    return ensure_min_partitions(df, min_partitions).select(
-        F.col(id_col).alias("id"),
-        shingle_hashes(F.col(text_col), shingle_n).alias("h"),
+    return shingle_sets(
+        df, id_col, text_col, shingle_n, min_partitions
+    ).select(
+        "id",
+        F.array_distinct(
+            F.transform(
+                "shingles",
+                lambda s: F.abs(F.xxhash64(s)) % F.lit(MERSENNE_P),
+            )
+        ).alias("h"),
     )
 
 
@@ -196,22 +236,24 @@ def _pairs_from_banded(
     Shared by the xxhash64 production path and the md5 oracled twin —
     bucket capping and pair explosion are hash-family independent.
 
-    Hot buckets are dropped BEFORE the ``collect_list`` aggregation
-    (:func:`sqltask_spark.operators.bucketing.drop_hot_buckets`, the
-    same skinny count-window pre-cap the SimHash path uses): a
+    Hot AND singleton buckets are dropped BEFORE the ``collect_list``
+    aggregation, in one count window
+    (:func:`sqltask_spark.operators.bucketing.drop_hot_buckets` with
+    ``min_size=2``, the same skinny pre-cap the SimHash path uses): a
     boilerplate band-collision bucket with millions of members must
     never be materialized as one giant array row (spill pressure,
-    2 GB array-row limit) only to be discarded by a post-agg size
-    filter. The output is provably identical to post-agg capping —
-    the same buckets are dropped, just earlier.
+    2 GB array-row limit) only to be discarded, and the singleton
+    buckets — most band rows of a corpus — pair with nothing. The
+    output is identical to post-agg filtering: the same buckets are
+    dropped, just earlier.
     """
     from sqltask_spark.operators.bucketing import drop_hot_buckets
 
-    capped = drop_hot_buckets(banded, ["band", "band_hash"], max_bucket_size)
-    buckets = (
-        capped.groupBy("band", "band_hash")
-        .agg(F.collect_list("id").alias("ids"))
-        .filter(F.size("ids") >= 2)
+    kept = drop_hot_buckets(
+        banded, ["band", "band_hash"], max_bucket_size, min_size=2
+    )
+    buckets = kept.groupBy("band", "band_hash").agg(
+        F.collect_list("id").alias("ids")
     )
     pairs = buckets.select(
         F.explode(
@@ -344,15 +386,9 @@ def md5_shingled_docs(
     xxhash64 so an external SQL engine (the DuckDB oracle) reproduces
     every hash bit-for-bit.
     """
-    from sqltask_spark.data import ensure_min_partitions
-
-    return ensure_min_partitions(df).select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(
-            F.transform(
-                word_shingles(F.col(text_col), shingle_n), _md5_long_of
-            )
-        ).alias("h"),
+    return shingle_sets(df, id_col, text_col, shingle_n).select(
+        "id",
+        F.array_distinct(F.transform("shingles", _md5_long_of)).alias("h"),
     )
 
 
@@ -526,21 +562,18 @@ def minhash_contamination_pairs_md5(
     assert num_perm % bands == 0, "bands must divide num_perm"
     from sqltask_spark.data import materialize_and_release
 
-    from sqltask_spark.data import ensure_min_partitions
-
     # side rides the shingling projection and the signature groupBy
     # (r12 optimization, guide §2.4): the former shape re-attached it
     # with TWO corpus-scale joins (shingled⋈sides, wide⋈shingled) —
     # both removable because side is a function of id, so carrying it
     # as an extra groupBy key yields identical signatures.
-    shingled = ensure_min_partitions(docs).select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(
-            F.transform(
-                word_shingles(F.col(text_col), shingle_n), _md5_long_of
-            )
-        ).alias("h"),
-        F.col(side_col).cast("int").alias("side"),
+    shingled = shingle_sets(
+        docs, id_col, text_col, shingle_n,
+        carry=(F.col(side_col).cast("int").alias("side"),),
+    ).select(
+        "id",
+        F.array_distinct(F.transform("shingles", _md5_long_of)).alias("h"),
+        "side",
     )
     if eager:
         shingled = shingled.persist()
@@ -557,12 +590,10 @@ def minhash_contamination_pairs_md5(
     from sqltask_spark.operators.bucketing import drop_hot_buckets
 
     banded = drop_hot_buckets(
-        banded, ["band", "band_hash"], max_bucket_size
+        banded, ["band", "band_hash"], max_bucket_size, min_size=2
     )
-    buckets = (
-        banded.groupBy("band", "band_hash")
-        .agg(F.collect_list(F.struct("id", "side")).alias("members"))
-        .filter(F.size("members") >= 2)
+    buckets = banded.groupBy("band", "band_hash").agg(
+        F.collect_list(F.struct("id", "side")).alias("members")
     )
     pairs = buckets.select(
         F.explode(
@@ -619,13 +650,8 @@ def jaccard_pairs(
     broadcast-or-shuffle equi-joins) and computes
     |A∩B| / |A∪B| JVM-side.
     """
-    from sqltask_spark.data import ensure_min_partitions
-
-    shingled = ensure_min_partitions(docs).select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(word_shingles(F.col(text_col), shingle_n)).alias(
-            "shingles"
-        ),
+    shingled = shingle_sets(docs, id_col, text_col, shingle_n).select(
+        "id", F.array_distinct("shingles").alias("shingles")
     )
     a = shingled.select(
         F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")
@@ -672,13 +698,10 @@ def ngram_jaccard_pairs(
     materializes the small pair result and releases the shingle cache
     before returning; ``eager=False`` stays lazy without persisting.
     """
-    from sqltask_spark.data import ensure_min_partitions, materialize_and_release
+    from sqltask_spark.data import materialize_and_release
 
-    shingled = ensure_min_partitions(docs).select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(word_shingles(F.col(text_col), shingle_n)).alias(
-            "shingles"
-        ),
+    shingled = shingle_sets(docs, id_col, text_col, shingle_n).select(
+        "id", F.array_distinct("shingles").alias("shingles")
     )
     if eager:
         shingled = shingled.persist()
@@ -691,20 +714,19 @@ def ngram_jaccard_pairs(
         # (:func:`_pairs_from_banded`): a count-window pre-cap over the
         # shingle key (``drop_hot_buckets`` — identical df semantics to
         # the former groupBy+join: count per shingle STRING, keep
-        # df <= cap), then a same-key collect_list (reuses the window's
-        # hash partitioning — no second exchange) and a bounded a<b
-        # pair explode (<= cap² transient structs per bucket). The
-        # former formulation paid a df-aggregate exchange, an SMJ cap
-        # join and an SMJ candidate self-join — three extra full
-        # exchanges plus four sorts of the exploded inverted index.
+        # df <= cap; singleton shingles, which pair with nothing, go
+        # in the same window), then a same-key collect_list (reuses
+        # the window's hash partitioning — no second exchange) and a
+        # bounded a<b pair explode (<= cap² transient structs per
+        # bucket). The former formulation paid a df-aggregate
+        # exchange, an SMJ cap join and an SMJ candidate self-join —
+        # three extra full exchanges plus four sorts of the exploded
+        # inverted index.
         from sqltask_spark.operators.bucketing import drop_hot_buckets
 
-        capped = drop_hot_buckets(inv, ["shingle"], max_shingle_df)
-        buckets = (
-            capped.groupBy("shingle")
-            .agg(F.collect_list("id").alias("ids"))
-            .filter(F.size("ids") >= 2)
-        )
+        buckets = drop_hot_buckets(
+            inv, ["shingle"], max_shingle_df, min_size=2
+        ).groupBy("shingle").agg(F.collect_list("id").alias("ids"))
         cand = (
             buckets.select(
                 F.explode(
@@ -739,7 +761,10 @@ def ngram_jaccard_pairs(
         # array_intersect/union join runs over the few survivors
         # (measured 1.13M -> ~10³ pairs at sf0.1) instead of every
         # candidate. Skinny per-doc relations (3 ints), one extra
-        # exchange of the capped postings by id.
+        # exchange of the capped postings by id. The surviving count
+        # keeps singleton shingles: only the hot ones may be shared
+        # uncounted, so only they loosen the bound.
+        capped = drop_hot_buckets(inv, ["shingle"], max_shingle_df)
         doc_tot = shingled.select(
             "id", F.size("shingles").alias("__tot")
         )
@@ -842,16 +867,11 @@ def simhash_signatures(
     64 conditional-sum aggregates (map-side combined), one shuffle
     keyed by id, then pack the sign bits into one long.
     """
-    from sqltask_spark.data import ensure_min_partitions
-
     hashes = F.array_distinct(
-        F.transform(
-            word_shingles(F.col(text_col), shingle_n),
-            lambda s: F.xxhash64(s),
-        )
+        F.transform("shingles", lambda s: F.xxhash64(s))
     )
-    exploded = ensure_min_partitions(df).select(
-        F.col(id_col).alias("id"), F.explode(hashes).alias("h")
+    exploded = shingle_sets(df, id_col, text_col, shingle_n).select(
+        "id", F.explode(hashes).alias("h")
     )
     aggs = [F.count(F.lit(1)).alias("n")]
     for bit in range(64):
@@ -959,7 +979,6 @@ def simhash_near_pairs_md5(
     xor) is reproducible in DuckDB. Production stays on the xxhash64
     64-bit form.
     """
-    from sqltask_spark.data import ensure_min_partitions
     from sqltask_spark.operators.bucketing import drop_hot_buckets
 
     bits = 60
@@ -967,13 +986,9 @@ def simhash_near_pairs_md5(
     assert bits % chunks == 0, "chunks must divide 60"
     width = bits // chunks
 
-    hashes = F.array_distinct(
-        F.transform(
-            word_shingles(F.col(text_col), shingle_n), _md5_long_of
-        )
-    )
-    exploded = ensure_min_partitions(df).select(
-        F.col(id_col).alias("id"), F.explode(hashes).alias("h")
+    hashes = F.array_distinct(F.transform("shingles", _md5_long_of))
+    exploded = shingle_sets(df, id_col, text_col, shingle_n).select(
+        "id", F.explode(hashes).alias("h")
     )
     aggs = [F.count(F.lit(1)).alias("n")]
     for bit in range(bits):
@@ -1041,12 +1056,17 @@ def exact_dedup(
     cross-engine-stable choice); the empty string is a real value with
     its own md5('') group. Callers that want nulls ignored filter
     them upstream.
+
+    The input is widened via :func:`~sqltask_spark.data
+    .ensure_min_partitions`: the md5 of normalized text is CPU-bound
+    per-row work, and a one-split shard would hash on one core.
     """
+    from sqltask_spark.data import ensure_min_partitions
     from sqltask_spark.operators.text import fingerprint_md5
 
     agg = F.min(id_col) if keep == "min" else F.max(id_col)
     return (
-        df.select(
+        ensure_min_partitions(df).select(
             fingerprint_md5(F.col(text_col)).alias("fingerprint"),
             F.col(id_col),
         )

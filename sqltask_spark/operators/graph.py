@@ -6,7 +6,15 @@ pipeline needs CLUSTERS — every document labeled with a canonical
 representative so one survivor per group can be kept. That is
 connected components over the pair graph.
 
-Two algorithms, same join+min-aggregate primitive:
+Most pair graphs are small: a 20k-document shard yields ~10⁴ edges.
+:func:`connected_components` therefore first makes ONE bounded collect
+of the cleaned edge list (at most ``index_fs.KEYS_CAP`` rows, the
+engine's driver-collect bound). If the edges fit, a union-find on the
+driver solves the graph — union by smaller root, so every root is its
+component's minimum — and the labels return as one Arrow-shipped
+relation (``index_fs.small_relation``): one job instead of a few per
+round. Graphs past the bound take one of two distributed algorithms,
+same join+min-aggregate primitive:
 
 - ``label`` — min-label propagation. Each node starts labeled with
   its own id; every round each node takes the min of its label and
@@ -23,7 +31,7 @@ Two algorithms, same join+min-aggregate primitive:
   adversarial input (a 10⁴-link chain of pairwise near-dups) could
   exceed any fixed diameter bound.
 
-Scale design:
+Scale design (distributed arm):
 - Every round is shuffle-join + map-side-combined min-aggregate —
   no driver-side graph state, no per-node collected neighbor lists
   (the groupBy-min formulation sidesteps hub-node skew that a
@@ -53,6 +61,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from sqltask_spark.operators import index_fs
+
+_COMPONENT_SCHEMA = T.StructType([
+    T.StructField("node", T.LongType()),
+    T.StructField("component", T.LongType()),
+])
 
 
 def _truncate_lineage(df: DataFrame, reliable: bool) -> DataFrame:
@@ -82,16 +98,20 @@ def connected_components(
         silent partial clustering would corrupt a dedup pass. For
         ``label`` this bounds the graph diameter; for ``star`` it
         bounds alternating phases (O(log² n) suffices).
-    algorithm : ``"label"`` (min-label propagation, 1 join/round,
-        best for low-diameter dedup blobs) or ``"star"``
+    algorithm : the distributed algorithm for edge lists past
+        ``index_fs.KEYS_CAP`` rows (smaller ones are solved by a
+        driver union-find): ``"label"`` (min-label propagation, 1
+        join/round, best for low-diameter dedup blobs) or ``"star"``
         (large-star/small-star, diameter-independent).
     checkpoint_dir : when set, per-round lineage truncation uses
         reliable ``checkpoint()`` into this directory (fault-tolerant
         at the cost of a write per round) instead of
         ``localCheckpoint`` (executor-memory blocks, lost on executor
         failure). Sets the session's checkpoint dir if none is set.
-    stats : optional dict; on return ``stats["rounds"]`` records how
-        many propagation rounds / star phases ran.
+    stats : optional dict; on return ``stats["arm"]`` is
+        ``"driver"`` or the distributed algorithm that ran, and
+        ``stats["rounds"]`` how many propagation rounds / star phases
+        it took (0 on the driver arm).
 
     Returns
     -------
@@ -114,6 +134,20 @@ def connected_components(
         .filter(F.col("u") != F.col("v"))
         .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
     )
+    cap = index_fs.KEYS_CAP  # 0 forces the distributed arm
+    # Arrow collect: no per-row Python objects, and one limit stage
+    # where collect()'s incremental scan runs a job per scale-up step
+    # over a many-partition input
+    got = e.limit(cap + 1).toArrow() if cap > 0 else None
+    if got is not None and got.num_rows <= cap:
+        if stats is not None:
+            stats.update(arm="driver", rounds=0)
+        pairs = zip(got.column("u").to_pylist(), got.column("v").to_pylist())
+        return index_fs.small_relation(
+            edges.sparkSession, _union_find(pairs), _COMPONENT_SCHEMA
+        )
+    if stats is not None:
+        stats["arm"] = algorithm
     if algorithm == "star":
         return _connected_components_star(
             e, max_iter, reliable, stats
@@ -153,6 +187,27 @@ def connected_components(
         f"connected_components did not converge in {max_iter} rounds "
         "(graph diameter exceeds max_iter; use algorithm='star')"
     )
+
+
+def _union_find(edges) -> list[tuple[int, int]]:
+    """(node, component) of the ``(u, v)`` edges: union by smaller
+    root with path halving, so each root is its component's minimum
+    node — the label both distributed algorithms converge to."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in edges:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return [(x, find(x)) for x in parent]
 
 
 def _connected_components_star(

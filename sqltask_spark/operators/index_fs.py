@@ -438,6 +438,14 @@ def count_and_bounds(df, id_col: str) -> "tuple[int, dict | None]":
 # than the exchange it avoids.
 SMALL_BATCH_CAP = 512
 
+# Driver-collect bound: the most rows one bounded ``limit(cap + 1)``
+# collect brings to the driver — MERGE's per-key collect, each side of
+# the change-feed digest window, and the edge list that
+# ``graph.connected_components`` solves with a driver union-find.
+# Past it the callers keep their distributed formulation; tests set
+# it to 0 to force that arm.
+KEYS_CAP = 65536
+
 
 def collect_id_rows(
     df, id_col: str, cap: int = SMALL_BATCH_CAP

@@ -55,10 +55,11 @@ _DATA = "data"
 
 # Bounded-collect caps for the driver-side fast paths (module level
 # so tests can force the join formulations and pin fast ≡ join).
-# _KEYS_CAP bounds the per-key collects — the one MERGE always does,
-# and each manifest-diff side's digests in the change-feed window;
-# _INLINE_CAP bounds the keys inlined into isin literals (the MERGE
-# decide fast path, and the changed keys of a change-feed window).
+# index_fs.KEYS_CAP bounds the per-key collects — the one MERGE always
+# does, and each manifest-diff side's digests in the change-feed
+# window; _INLINE_CAP bounds the keys inlined into isin literals (the
+# MERGE decide fast path, and the changed keys of a change-feed
+# window).
 #
 # The isin caps sit at the MEASURED isin-vs-join crossover (r12
 # session 4): an N-literal isin costs analysis/codegen time that grows
@@ -68,7 +69,6 @@ _DATA = "data"
 # "fast" path loses to the exchange it avoids. The caps bound the
 # literal count, not correctness: bigger batches take the join
 # formulation, which is also the right shape at 100 TB.
-_KEYS_CAP = 65536
 _INLINE_CAP = 512
 
 
@@ -546,10 +546,10 @@ def merge_into_parquet(
             extra = [p0.alias("__p0"), p1.alias("__p1")]
         key_rows = (
             per_key.select(*key_cols, "__c", "__d", *extra)
-            .limit(_KEYS_CAP + 1)
+            .limit(index_fs.KEYS_CAP + 1)
             .collect()
         )
-        capped = len(key_rows) > _KEYS_CAP
+        capped = len(key_rows) > index_fs.KEYS_CAP
         if capped:
             dup = (
                 per_key.filter(F.col("__c") > 1).limit(1).collect()
@@ -1006,14 +1006,14 @@ def _classify_window(
     h2)`` digests — two independently-seeded xxhash64 row digests
     with per-column null indicators, 128 collision bits, the
     :func:`~sqltask_spark.data.content_fingerprint` trust class — are
-    collected in one bounded collect (``_KEYS_CAP`` per side) and
-    classified on the driver. ``None`` when the window does not
-    qualify: a
-    composite key, a side past ``_KEYS_CAP``, a null or non-int/str
-    key, or more changed keys than ``_INLINE_CAP`` (they become the
-    arms' isin literals). The gate is the CHANGED keys, not the side
-    sizes: a MERGE rewrites whole files, so a handful of changes can
-    put thousands of carried survivor rows on each side."""
+    collected in one bounded collect (``index_fs.KEYS_CAP`` per
+    side) and classified on the driver. ``None`` when the window does
+    not qualify: a composite key, a side past ``index_fs.KEYS_CAP``,
+    a null or non-int/str key, or more changed keys than
+    ``_INLINE_CAP`` (they become the arms' isin literals). The gate
+    is the CHANGED keys, not the side sizes: a MERGE rewrites whole
+    files, so a handful of changes can put thousands of carried
+    survivor rows on each side."""
     if len(key_cols) != 1:
         return None
     kc = key_cols[0]
@@ -1044,17 +1044,17 @@ def _classify_window(
     rows = (
         side(pre, 0)
         .unionByName(side(post, 1))
-        .limit(2 * _KEYS_CAP + 1)
+        .limit(2 * index_fs.KEYS_CAP + 1)
         .collect()
     )
-    if len(rows) > 2 * _KEYS_CAP or not all(
+    if len(rows) > 2 * index_fs.KEYS_CAP or not all(
         isinstance(r["_k"], (int, str)) and not isinstance(r["_k"], bool)
         for r in rows
     ):
         return None
     pre_map = {r["_k"]: tuple(r[2:]) for r in rows if r["_s"] == 0}
     post_map = {r["_k"]: tuple(r[2:]) for r in rows if r["_s"] == 1}
-    if max(len(pre_map), len(post_map)) > _KEYS_CAP:
+    if max(len(pre_map), len(post_map)) > index_fs.KEYS_CAP:
         return None
 
     def entry(k, v):

@@ -82,13 +82,22 @@ def avg_token_length(col: Column) -> Column:
     return total.cast("double") / F.size(toks)
 
 
+def _stopword_hits(toks: Column, lang: str) -> Column:
+    """Tokens of ``toks`` that are stopwords of ``lang``, counted as
+    ``size(toks) - size(toks with every stopword removed)`` — a chain
+    of ``array_remove`` calls instead of a ``filter`` lambda, so the
+    plan holds no higher-order function and codegen's common
+    subexpression elimination shares the token array."""
+    rest = toks
+    for w in STOPWORDS[lang]:
+        rest = F.array_remove(rest, w)
+    return F.size(toks) - F.size(rest)
+
+
 def stopword_ratio(col: Column, lang: str = "en") -> Column:
     """Fraction of tokens that are stopwords of ``lang``."""
     toks = tokenize(col)
-    hits = F.size(
-        F.filter(toks, lambda t: t.isin(*STOPWORDS[lang]))
-    )
-    return hits.cast("double") / F.size(toks)
+    return _stopword_hits(toks, lang).cast("double") / F.size(toks)
 
 
 def quality_score(col: Column) -> Column:
@@ -102,7 +111,7 @@ def quality_score(col: Column) -> Column:
     n = F.size(toks)
     ttr = F.size(F.array_distinct(toks)).cast("double") / n
     length_score = F.least(n.cast("double") / F.lit(100.0), F.lit(1.0))
-    sw = stopword_ratio(col, "en")
+    sw = _stopword_hits(toks, "en").cast("double") / n
     return ttr * 0.5 + length_score * 0.3 + (F.lit(1.0) - sw) * 0.2
 
 
@@ -117,18 +126,31 @@ def lang_scores(col: Column) -> dict[str, Column]:
 
 def lang_id(col: Column) -> Column:
     """Argmax language by stopword hits; ties break alphabetically,
-    zero hits → 'und' (undetermined)."""
+    zero hits → 'und' (undetermined).
+
+    One ``array_max`` over ``struct(score, -rank, lang)`` per language
+    (rank = alphabetical position), so on equal scores the
+    alphabetically-first language wins. A sentinel
+    ``struct(0, 1, 'und')`` outranks every zero score (and the NULL
+    scores of NULL text) but no positive one. The plan holds one
+    tokenizer per language, where an incumbent-update
+    ``when(score > best, ...)`` chain would re-inline every earlier
+    score into each later branch, doubling the plan per language.
+    """
     scores = lang_scores(col)
-    best_lang = F.lit("und")
-    best_score = F.lit(0)
-    # alphabetical order + strict > ⇒ on ties the alphabetically-first
-    # language wins (later equal scores don't replace the incumbent)
-    for lang in sorted(scores):
-        s = scores[lang]
-        take = s > best_score
-        best_lang = F.when(take, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(take, s).otherwise(best_score)
-    return best_lang
+    cands = [
+        F.struct(
+            scores[lang].alias("score"),
+            F.lit(-rank).alias("rank"),
+            F.lit(lang).alias("lang"),
+        )
+        for rank, lang in enumerate(sorted(scores))
+    ]
+    und = F.struct(
+        F.lit(0).alias("score"), F.lit(1).alias("rank"),
+        F.lit("und").alias("lang"),
+    )
+    return F.array_max(F.array(*cands, und))["lang"]
 
 
 def fingerprint_md5(col: Column) -> Column:

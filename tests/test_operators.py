@@ -846,7 +846,23 @@ def test_minhash_dedup_pairs_releases_cache(spark):
     out.unpersist()
 
 
-def test_connected_components_chain_and_islands(spark):
+def _cc_arms() -> list[tuple[int, str]]:
+    """Connected-components arms as (driver-collect bound, arm): the
+    driver union-find under the real bound, the distributed label
+    algorithm with the bound forced to 0."""
+    from sqltask_spark.operators import index_fs
+
+    return [(index_fs.KEYS_CAP, "driver"), (0, "label")]
+
+
+def _force_distributed_cc(monkeypatch):
+    from sqltask_spark.operators import index_fs
+
+    monkeypatch.setattr(index_fs, "KEYS_CAP", 0)
+
+
+def test_connected_components_chain_and_islands(spark, monkeypatch):
+    from sqltask_spark.operators import index_fs
     from sqltask_spark.operators.graph import connected_components
 
     # chain 1-2-3-4 (diameter 3), island {10,11}, self-loop 20-20
@@ -854,18 +870,55 @@ def test_connected_components_chain_and_islands(spark):
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 10), (20, 20)],
         ["src", "dst"],
     )
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(edges).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+    for cap, arm in _cc_arms():
+        monkeypatch.setattr(index_fs, "KEYS_CAP", cap)
+        stats: dict = {}
+        got = {
+            r["node"]: r["component"]
+            for r in connected_components(edges, stats=stats).collect()
+        }
+        assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}, arm
+        assert stats["arm"] == arm
+        assert (stats["rounds"] == 0) == (arm == "driver")
 
 
-def test_connected_components_empty(spark):
+def test_connected_components_empty(spark, monkeypatch):
+    from sqltask_spark.operators import index_fs
     from sqltask_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame([], "src LONG, dst LONG")
-    assert connected_components(edges).count() == 0
+    for cap, arm in _cc_arms():
+        monkeypatch.setattr(index_fs, "KEYS_CAP", cap)
+        got = connected_components(edges)
+        assert got.count() == 0, arm
+        assert got.schema.simpleString() == (
+            "struct<node:bigint,component:bigint>"
+        )
+
+
+def test_connected_components_arm_boundary(spark, monkeypatch):
+    """An edge list of exactly ``index_fs.KEYS_CAP`` cleaned rows is
+    solved on the driver; one edge more takes the distributed arm.
+    Self-loops and null ends are dropped before the bound counts."""
+    from sqltask_spark.operators import index_fs
+    from sqltask_spark.operators.graph import connected_components
+
+    monkeypatch.setattr(index_fs, "KEYS_CAP", 4)
+    fit = [(1, 2), (2, 3), (10, 11), (12, 11), (5, 5), (None, 7)]
+    arms = {}
+    for edges in (fit, fit + [(3, 4)]):
+        stats: dict = {}
+        df = spark.createDataFrame(edges, "src LONG, dst LONG")
+        got = {
+            r["node"]: r["component"]
+            for r in connected_components(df, stats=stats).collect()
+        }
+        arms[len(edges)] = stats["arm"]
+        want = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10}
+        if (3, 4) in edges:
+            want[4] = 1
+        assert got == want
+    assert arms == {6: "driver", 7: "label"}
 
 
 def test_minhash_index_probe_matches_percall(spark, tables, tmp_path):
@@ -1155,14 +1208,16 @@ def test_contamination_cap_bounds_boilerplate(spark, tmp_path):
     assert (1, 10) in got_all and len(got_all) > 100
 
 
-def test_connected_components_star_long_chain(spark):
+def test_connected_components_star_long_chain(spark, monkeypatch):
     """A 10^4-link chain is the adversarial case for min-label
     propagation (rounds = diameter); the alternating
     large-star/small-star algorithm must converge in O(log^2 n)
     phases — we assert a generous bound of 20 and document the
-    actual count in the assertion message."""
+    actual count in the assertion message. The chain fits the driver
+    bound, so the distributed arm is forced."""
     from sqltask_spark.operators.graph import connected_components
 
+    _force_distributed_cc(monkeypatch)
     n = 10_000
     edges = spark.range(n - 1).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
@@ -1173,12 +1228,14 @@ def test_connected_components_star_long_chain(spark):
     )
     assert got.filter(F.col("component") != 0).count() == 0
     assert got.count() == n
+    assert stats["arm"] == "star"
     assert stats["rounds"] <= 20, f"star took {stats['rounds']} phases"
 
 
-def test_connected_components_star_matches_label(spark):
-    """star and label algorithms agree on a mixed graph (two blobs,
-    a chain, islands, dup/self edges)."""
+def test_connected_components_star_matches_label(spark, monkeypatch):
+    """The driver arm and the distributed star and label algorithms
+    agree on a mixed graph (two blobs, a chain, islands, dup/self
+    edges)."""
     import random
 
     from sqltask_spark.operators.graph import connected_components
@@ -1192,24 +1249,36 @@ def test_connected_components_star_matches_label(spark):
     edges += [(i, i + 1) for i in range(40, 60)]
     edges += [(100, 101), (101, 100), (7, 7)]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    lab = {
-        r["node"]: r["component"]
-        for r in connected_components(df, algorithm="label").collect()
-    }
-    star = {
-        r["node"]: r["component"]
-        for r in connected_components(df, algorithm="star").collect()
-    }
-    assert lab == star and star[41] == 40 and star[101] == 100
+
+    def components(algorithm: str, arm: str) -> dict:
+        stats: dict = {}
+        got = {
+            r["node"]: r["component"]
+            for r in connected_components(
+                df, algorithm=algorithm, stats=stats
+            ).collect()
+        }
+        assert stats["arm"] == arm
+        return got
+
+    driver = components("label", "driver")
+    _force_distributed_cc(monkeypatch)
+    lab = components("label", "label")
+    star = components("star", "star")
+    assert driver == lab == star and star[41] == 40 and star[101] == 100
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
+def test_connected_components_reliable_checkpoint(
+    spark, tmp_path, monkeypatch
+):
     """checkpoint_dir switches lineage truncation to reliable
-    checkpoint(): results identical and checkpoint files written."""
+    checkpoint(): results identical and checkpoint files written. Only
+    the distributed arm checkpoints, so it is forced."""
     import os
 
     from sqltask_spark.operators.graph import connected_components
 
+    _force_distributed_cc(monkeypatch)
     ckpt = str(tmp_path / "ckpt")
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], ["src", "dst"]
@@ -1268,6 +1337,58 @@ def test_redact_text_cascade(spark):
     ).first()
     assert row["red"] == "contact <email> or call <num> now"
     assert (row["ne"], row["nn"]) == (1, 1)
+
+
+def _ref_text_scores(text: str | None) -> tuple:
+    """Python model of (lang_id, stopword_ratio en, stopword_ratio de,
+    quality_score) over ASCII text: lowercase, collapse whitespace
+    runs, strip spaces, split on single spaces."""
+    import re
+
+    from sqltask_spark.operators.text import STOPWORDS
+
+    if text is None:
+        return "und", None, None, None
+    toks = re.sub(r"\s+", " ", text.lower()).strip(" ").split(" ")
+    best, best_score = "und", 0
+    for lang in sorted(STOPWORDS):
+        score = len(set(toks) & set(STOPWORDS[lang]))
+        if score > best_score:
+            best, best_score = lang, score
+    n = len(toks)
+
+    def ratio(lang):
+        return sum(t in STOPWORDS[lang] for t in toks) / n
+
+    q = (len(set(toks)) / n * 0.5 + min(n / 100.0, 1.0) * 0.3
+         + (1.0 - ratio("en")) * 0.2)
+    return best, ratio("en"), ratio("de"), q
+
+
+def test_text_scores_match_python_reference(spark):
+    """lang_id, stopword_ratio and quality_score agree exactly with a
+    Python model on ties (alphabetical winner), NULL, empty and
+    whitespace-only text, repeated stopwords and zero-hit text."""
+    from sqltask_spark.operators import text as tx
+
+    texts = [
+        None, "", "   ", "\t\n ", "the the the a", "The THE of x",
+        "de la", "la de le", "der de", "le la les et", "el la y que",
+        "shi bu de le", "zzz qqq", "und und die das ist",
+        "  a  b\tc  the  ", "x " * 150,
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "id long, text string")
+    t = F.col("text")
+    got = {
+        r["id"]: tuple(r)[1:]
+        for r in df.select(
+            "id", tx.lang_id(t), tx.stopword_ratio(t),
+            tx.stopword_ratio(t, "de"), tx.quality_score(t),
+        ).collect()
+    }
+    for i, text in enumerate(texts):
+        assert got[i] == _ref_text_scores(text), repr(text)
+    assert got[6][0] == "es" and got[2][0] == "und"
 
 
 def test_repetition_stats_flags_degenerate_doc(spark, tmp_path):
@@ -1476,6 +1597,60 @@ def test_learn_bpe_merges_distributed_bit_identical(spark, tables):
     assert tbl(
         learn_bpe_merges_distributed(docs, n_merges=8, min_pair_freq=2)
     ) == tbl(learn_bpe_merges(docs, n_merges=8, min_pair_freq=2))
+
+
+def test_learn_bpe_distributed_keeps_checkpoint_until_replaced(
+    spark, monkeypatch
+):
+    """A localCheckpoint'ed vocabulary is the lineage root of every
+    vocabulary lazily persisted after it, up to the next checkpoint:
+    released earlier, a lost successor block could no longer
+    recompute. The trainer releases a checkpoint only once every
+    successor persisted on top of it is released."""
+    from sqltask_spark.operators.bpe import (
+        _TRUNC_EVERY,
+        learn_bpe_merges,
+        learn_bpe_merges_distributed,
+    )
+
+    cls = type(spark.range(1))
+    ckpts: list = []
+    live: list = []  # (persisted df, index of the checkpoint it is on)
+    early: list = []
+    orig = cls.localCheckpoint, cls.persist, cls.unpersist
+
+    def local_checkpoint(self, *a, **k):
+        out = orig[0](self, *a, **k)
+        ckpts.append(out)
+        return out
+
+    def persist(self, *a, **k):
+        out = orig[1](self, *a, **k)
+        live.append((out, len(ckpts) - 1))
+        return out
+
+    def unpersist(self, *a, **k):
+        for i, c in enumerate(ckpts):
+            if self is c and any(j == i for _, j in live):
+                early.append(i)
+        live[:] = [(d, j) for d, j in live if d is not self]
+        return orig[2](self, *a, **k)
+
+    monkeypatch.setattr(cls, "localCheckpoint", local_checkpoint)
+    monkeypatch.setattr(cls, "persist", persist)
+    monkeypatch.setattr(cls, "unpersist", unpersist)
+    docs = spark.createDataFrame(
+        [(1, "low lower newest widest lowest newer wider slowest")],
+        ["doc_id", "text"],
+    )
+    n = _TRUNC_EVERY + 2
+    got = learn_bpe_merges_distributed(docs, n_merges=n).collect()
+    monkeypatch.undo()
+    assert len(got) == n and len(ckpts) == 2
+    assert early == [], f"checkpoints {early} released under live successors"
+    assert sorted(tuple(r) for r in got) == sorted(
+        tuple(r) for r in learn_bpe_merges(docs, n_merges=n).collect()
+    )
 
 
 def test_learn_bpe_merges_min_freq_stops(spark):

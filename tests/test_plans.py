@@ -728,3 +728,33 @@ def test_weighted_p75_double_udaf_plan_and_values(spark, sf_dir):
             expect = v
             break
     assert rows[0]["wp75_density"] == expect
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_text_scores_plan_no_lambdas_one_tokenizer_per_language(spark):
+    """lang_id, quality_score and stopword_ratio are plain expressions:
+    no higher-order lambda (interpreted, outside subexpression
+    elimination) and, for lang_id, one tokenizer per language instead
+    of a CASE tree that re-inlines every earlier score per branch."""
+    from sqltask_spark.operators import text as tx
+
+    df = spark.createDataFrame([(1, "the a")], "id long, text string")
+    t = F.col("text")
+    for score in (tx.lang_id(t), tx.quality_score(t), tx.stopword_ratio(t)):
+        assert "lambdafunction" not in _executed(df.select(score.alias("s")))
+    plan = _executed(df.select(tx.lang_id(t).alias("lang")))
+    assert plan.count("regexp_replace") == len(tx.STOPWORDS)
+
+
+def test_shingled_docs_tokenizes_once(spark):
+    """The shingle projection normalizes each document once: the
+    executed plan holds exactly one regexp_replace, however many
+    slices and hashes read the token array."""
+    from sqltask_spark.operators.dedup import shingled_docs
+
+    df = spark.createDataFrame([(1, "a b c d")], "id long, text string")
+    plan = _executed(shingled_docs(df, "id", "text"))
+    assert plan.count("regexp_replace") == 1

@@ -7,8 +7,11 @@ round-trips.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
+
+from sqltask_spark.operators import index_fs
 
 # no surrogates/control-plane exotica, but INCLUDES the exotic
 # whitespace the engine's pinned class must handle (NEL \x85, NBSP
@@ -125,18 +128,23 @@ def test_cosine_near_pairs_bounds_and_symmetry(spark, vecs):
         assert -1.000001 <= r["cosine"] <= 1.000001
 
 
-@settings(max_examples=8, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 14), st.integers(0, 14)),
-        min_size=0,
-        max_size=25,
-    )
+_EDGES = st.lists(
+    st.tuples(st.integers(0, 14), st.integers(0, 14)),
+    min_size=0,
+    max_size=25,
 )
-def test_connected_components_matches_union_find(spark, edges):
+
+
+def _check_components_match_union_find(
+    spark, edges, algorithm: str
+) -> None:
+    """On both arms — the driver union-find (edge list within
+    ``index_fs.KEYS_CAP``) and, with the bound forced to 0, the
+    distributed ``algorithm`` — connected_components labels every
+    edge node with the minimum of its component, as a plain
+    union-find does."""
     from sqltask_spark.operators.graph import connected_components
 
-    # reference: plain union-find over the same edges
     parent: dict[int, int] = {}
 
     def find(x):
@@ -152,7 +160,6 @@ def test_connected_components_matches_union_find(spark, edges):
             if ru != rv:
                 parent[max(ru, rv)] = min(ru, rv)
     nodes = {x for u, v in edges if u != v for x in (u, v)}
-    want = {n: find(n) for n in nodes}
     # find() path-halving leaves roots correct, but map every node to
     # the MIN member of its component for comparison
     roots: dict[int, int] = {}
@@ -164,11 +171,24 @@ def test_connected_components_matches_union_find(spark, edges):
     df = spark.createDataFrame(edges or [(0, 0)], "src LONG, dst LONG")
     if not edges:
         df = df.filter("src IS NULL")
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(df).collect()
-    }
-    assert got == want
+    for cap, arm in ((index_fs.KEYS_CAP, "driver"), (0, algorithm)):
+        stats: dict = {}
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(index_fs, "KEYS_CAP", cap)
+            got = {
+                r["node"]: r["component"]
+                for r in connected_components(
+                    df, algorithm=algorithm, stats=stats
+                ).collect()
+            }
+        assert got == want, arm
+        assert stats["arm"] == arm
+
+
+@settings(max_examples=8, deadline=None)
+@given(_EDGES)
+def test_connected_components_matches_union_find(spark, edges):
+    _check_components_match_union_find(spark, edges, "label")
 
 
 @settings(max_examples=6, deadline=None)
@@ -203,48 +223,12 @@ def test_quantize_symmetric_error_bound(spark, vecs):
 
 
 @settings(max_examples=6, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 14), st.integers(0, 14)),
-        min_size=0,
-        max_size=25,
-    )
-)
+@given(_EDGES)
 def test_star_components_match_union_find(spark, edges):
     """The large-star/small-star algorithm agrees with a reference
     union-find on arbitrary small graphs (self-loops, duplicates,
     disconnected nodes included)."""
-    from sqltask_spark.operators.graph import connected_components
-
-    parent: dict[int, int] = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for u, v in edges:
-        if u != v:
-            ru, rv = find(u), find(v)
-            if ru != rv:
-                parent[max(ru, rv)] = min(ru, rv)
-    nodes = {x for u, v in edges if u != v for x in (u, v)}
-    roots: dict[int, int] = {}
-    for n in nodes:
-        r = find(n)
-        roots[r] = min(roots.get(r, n), n)
-    want = {n: roots[find(n)] for n in nodes}
-
-    df = spark.createDataFrame(edges or [(0, 0)], "src LONG, dst LONG")
-    if not edges:
-        df = df.filter("src IS NULL")
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(df, algorithm="star").collect()
-    }
-    assert got == want
+    _check_components_match_union_find(spark, edges, "star")
 
 
 @settings(max_examples=6, deadline=None)
